@@ -235,8 +235,10 @@ class Fixtures:
         )
 
     def warm_up(self) -> None:
-        """One untimed pass over the whole pages table."""
-        self._write(self.pages, self.run_dir / "warmup")
+        """Two untimed passes over the whole pages table: after one, pass
+        walls still fall by ~10% over the next few."""
+        for _ in range(2):
+            self._write(self.pages, self.run_dir / "warmup")
         shutil.rmtree(self.run_dir / "warmup")
 
     def unit(self) -> tuple:
