@@ -8,11 +8,13 @@ Architecture (north rule, BASELINE.json:6,14):
   functions of (score desc, url asc) — parallelism-invariant by construction.
 * URL-seen = broadcast bloom pre-filter (definitely-new links skip the exact
   anti-join) → per-partition cuckoo filters (second-stage, partitioned by
-  ``pmod(xxhash64(url), P)``) → exact left-anti residual. Bloom fragments
-  tree-merge (``RDD.treeReduce``) into the one broadcastable blob; cuckoo
-  state lives as a partitioned table merged distributedly per pid
-  (groupBy + applyInPandas) and probed via cogroup — the driver never
-  holds or ships per-partition sketch state.
+  ``pmod(xxhash64(url), P)``) → exact left-anti residual. One
+  ``mapInPandas`` stage builds both sketches: each pid's cuckoo table is
+  carried forward from the previous epoch and takes only the new hashes,
+  and the per-task bloom fragments are or-ed on the driver into the one
+  broadcastable blob. The probe is one cogroup of the links with the cuckoo
+  table on pid (bloom, then cuckoo) — the driver never holds or ships
+  per-partition cuckoo state.
 * fetch = equi-join of the admitted batch against the pages corpus on ``url``
   (the sandbox's stand-in for HTTP; AQE splits the mega-host skew).
 * extract = the vectorized pandas-UDF pipeline (company + reviews + links).
@@ -75,6 +77,44 @@ def _manifest_path(ckpt: Path, epoch: int) -> Path:
     return ckpt / "manifests" / f"epoch_{epoch:05d}.json"
 
 
+def sketch_builder(n_bits: int, n_hashes: int, capacity: int):
+    """The sketch build's ``mapInPandas`` function over (pid, h, blob) rows.
+
+    A row with a ``blob`` carries its pid's cuckoo table forward from the
+    previous epoch; every other row is a new url hash ``h``. Yields one row
+    per pid — the carried table (or a fresh one of ``capacity``) with only
+    the new hashes inserted — plus a pid -1 row: the bloom of the new hashes.
+    """
+
+    def build(pdfs):
+        carried: dict = {}
+        new: dict = {}
+        for pdf in pdfs:
+            is_carried = pdf["blob"].notna()
+            for pid, blob in zip(pdf["pid"][is_carried].tolist(), pdf["blob"][is_carried]):
+                carried[pid] = bytes(blob)
+            for pid, hs in pdf[~is_carried].groupby("pid")["h"]:
+                new.setdefault(int(pid), []).append(hs.to_numpy().view(np.uint64))
+        bloom = BloomFilter(n_bits, n_hashes)
+        pids, blobs = [], []
+        for pid in sorted(carried.keys() | new.keys()):
+            cf = (
+                CuckooFilter.from_bytes(carried[pid])
+                if pid in carried
+                else CuckooFilter.for_capacity(capacity)
+            )
+            if pid in new:
+                # sorted: the table does not depend on shuffle arrival order
+                hs = np.sort(np.concatenate(new[pid]))
+                bloom.add_many(hs)
+                cf.add_many(hs)
+            pids.append(pid)
+            blobs.append(cf.to_bytes())
+        yield pd.DataFrame({"pid": pids + [-1], "blob": blobs + [bloom.to_bytes()]})
+
+    return build
+
+
 class CrawlEngine:
     def __init__(self, spark: SparkSession, pages: DataFrame, config: CrawlConfig):
         self.spark = spark
@@ -87,7 +127,6 @@ class CrawlEngine:
         )
         self._robots = robots_df(spark, config.robots_rules)
         self._politeness = politeness_df(spark, config.host_budgets)
-        self._expand_cache: list = []  # DataFrames pinned for one expand step
         # deferred sketch build (round-4 verdict item 3): epoch N's sketch
         # build runs on this 1-worker pool, overlapping epoch N+1's
         # drain/fetch/extract instead of sitting on N's critical path. The
@@ -228,6 +267,48 @@ class CrawlEngine:
     def _cuckoo_dir(self, epoch: int) -> str:
         return str(self.ckpt / "sketches" / f"epoch={epoch}" / "cuckoo")
 
+    def _sketch_rows(
+        self,
+        urls: DataFrame,
+        epoch: int,
+        bloom: BloomFilter,
+        include_prev_cuckoo: bool = True,
+    ) -> DataFrame:
+        """The one-stage sketch build of ``epoch`` (a single ``mapInPandas``).
+
+        Its input is the url hashes of ``urls`` unioned with the previous
+        epoch's cuckoo table (one row per pid), repartitioned by pid =
+        pmod(xxhash64(url), P): each pid's table is carried forward and takes
+        only the new hashes (``include_prev_cuckoo=False`` on the
+        rebuild-from-deltas path, where ``urls`` already is the whole seen
+        set). Output: one (pid, cuckoo table) row per pid, plus one pid -1
+        bloom fragment (``bloom``'s shape) of each task's new hashes.
+        """
+        P = self.cfg.cuckoo_partitions
+        rows = urls.select(
+            F.pmod(F.xxhash64("url"), F.lit(P)).cast("int").alias("pid"),
+            F.xxhash64("url").alias("h"),
+            F.lit(None).cast("binary").alias("blob"),
+        )
+        prev_dir = self._cuckoo_dir(epoch - 1)
+        if include_prev_cuckoo and Path(prev_dir).exists():
+            # carried rows get h = 0, not null: Arrow hands pandas a column
+            # holding nulls as float64, which would round every 64-bit hash
+            rows = rows.unionByName(
+                self.spark.read.parquet(prev_dir).select(
+                    "pid", F.lit(0).cast("long").alias("h"), "blob"
+                )
+            )
+        # pid is the LOGICAL cuckoo partition; the physical shuffle width
+        # follows cluster parallelism (several pids may share one task).
+        width = min(P, self.spark.sparkContext.defaultParallelism)
+        return rows.repartition(width, "pid").mapInPandas(
+            sketch_builder(
+                bloom.n_bits, bloom.n_hashes, self.cfg.cuckoo_capacity_per_partition
+            ),
+            "pid int, blob binary",
+        )
+
     def _build_sketches(
         self,
         urls: DataFrame,
@@ -235,170 +316,71 @@ class CrawlEngine:
         epoch: int,
         include_prev_cuckoo: bool = True,
     ) -> bytes:
-        """One distributed pass builds BOTH sketches; neither merge touches
-        the driver with per-partition state:
+        """Build and commit BOTH sketches of ``epoch`` in one Python stage
+        (:meth:`_sketch_rows`). Its persisted output commits as this epoch's
+        cuckoo table, and its bloom fragments are collected and or-ed into
+        ``prev_bloom`` — the one sketch the driver keeps, because
+        broadcasting it is the point. The driver never holds cuckoo state,
+        so P and capacity can scale with the corpus.
 
-        * per-pid cuckoo fragments (urls land in pid = pmod(xxhash64(url),
-          P)) merge DISTRIBUTEDLY — groupBy(pid) + applyInPandas over the
-          union of this epoch's fragments and the previous epoch's
-          partitioned cuckoo table — and commit straight to this epoch's
-          cuckoo table (one row per pid). The driver never holds cuckoo
-          state, so P and capacity can scale with the corpus.
-        * per-task bloom fragments tree-merge (``RDD.treeReduce``) into the
-          single broadcastable pre-filter blob — the only sketch the driver
-          keeps, because broadcasting it is the point.
-
-        Returns the merged bloom blob (or-ed into ``prev_bloom``).
+        Returns the merged bloom blob.
         """
-        P = self.cfg.cuckoo_partitions
-        cap = self.cfg.cuckoo_capacity_per_partition
-        proto = (
+        bloom = (
             BloomFilter.from_bytes(prev_bloom)
             if prev_bloom is not None
             else BloomFilter.for_capacity(self.cfg.bloom_capacity, self.cfg.bloom_fpp)
         )
-        n_bits, n_hashes = proto.n_bits, proto.n_hashes
-
-        # pid is the LOGICAL cuckoo partition; the physical shuffle width
-        # follows cluster parallelism (build() groups by pid within a task,
-        # so several logical partitions may share one physical task).
-        width = min(P, self.spark.sparkContext.defaultParallelism)
-        hashed = urls.select(
-            F.xxhash64("url").alias("h"),
-            F.pmod(F.xxhash64("url"), F.lit(P)).cast("int").alias("pid"),
-        ).repartition(width, "pid")
-
-        def build(pdfs):
-            acc: dict = {}
-            bloom = BloomFilter(n_bits, n_hashes)
-            for pdf in pdfs:
-                if pdf.empty:
-                    continue
-                hs = pdf["h"].to_numpy().view(np.uint64)
-                bloom.add_many(hs)
-                for pid, grp in pdf.groupby("pid"):
-                    cf = acc.get(pid)
-                    if cf is None:
-                        cf = acc[pid] = CuckooFilter.for_capacity(cap)
-                    cf.add_many(grp["h"].to_numpy().view(np.uint64))
-            rows = [(int(pid), cf.to_bytes()) for pid, cf in acc.items()]
-            rows.append((-1, bloom.to_bytes()))  # pid -1 = bloom fragment
-            yield pd.DataFrame({"pid": [r[0] for r in rows], "blob": [r[1] for r in rows]})
-
-        frags = hashed.mapInPandas(build, "pid int, blob binary").persist()
-
-        # cuckoo: fragments ∪ previous table → per-pid merge → epoch table
-        # (include_prev_cuckoo=False on the rebuild-from-deltas path, where
-        # the fragments already cover the full seen set)
-        cuckoo_frags = frags.filter(F.col("pid") >= 0)
-        prev_dir = self._cuckoo_dir(epoch - 1)
-        if include_prev_cuckoo and Path(prev_dir).exists():
-            cuckoo_frags = cuckoo_frags.unionByName(
-                self.spark.read.parquet(prev_dir)
+        built = self._sketch_rows(urls, epoch, bloom, include_prev_cuckoo).persist()
+        try:
+            built.filter(F.col("pid") >= 0).write.mode("overwrite").parquet(
+                self._cuckoo_dir(epoch)
             )
-
-        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            blobs = sorted(bytes(b) for b in pdf["blob"])  # stable order
-            cf = CuckooFilter.from_bytes(blobs[0])
-            for b in blobs[1:]:
-                cf = cf.merge(CuckooFilter.from_bytes(b))
-            return pd.DataFrame(
-                {"pid": [int(pdf["pid"].iloc[0])], "blob": [cf.to_bytes()]}
-            )
-
-        (
-            cuckoo_frags.groupBy("pid")
-            .applyInPandas(merge_group, "pid int, blob binary")
-            .write.mode("overwrite")
-            .parquet(self._cuckoo_dir(epoch))
-        )
-
-        # bloom: tree-merge fragments, or into the carried-forward state
-        def or_blobs(a: bytes, b: bytes) -> bytes:
-            return BloomFilter.from_bytes(a).merge(BloomFilter.from_bytes(b)).to_bytes()
-
-        merged = (
-            frags.filter(F.col("pid") == -1)
-            .select("blob")
-            .rdd.map(lambda r: bytes(r["blob"]))
-            .treeReduce(or_blobs)
-        )
-        frags.unpersist()
-        return BloomFilter.from_bytes(merged).merge(proto).to_bytes()
+            for r in built.filter(F.col("pid") == -1).collect():
+                bloom.merge(BloomFilter.from_bytes(bytes(r["blob"])))
+        finally:
+            built.unpersist()
+        return bloom.to_bytes()
 
     def _sketch_prefilter(
         self, links: DataFrame, bloom_blob: bytes, cuckoo_epoch: int
     ) -> DataFrame:
-        """Adds ``maybe_seen``: False ⇒ provably never enqueued (bloom, then
-        cuckoo, both no-false-negative) ⇒ skips the exact anti-join.
+        """Adds ``maybe_seen`` to the (url, depth) links: False ⇒ provably
+        never enqueued (bloom, then cuckoo, both no-false-negative) ⇒ skips
+        the exact anti-join.
 
-        Stage 1 is the broadcast bloom pre-filter (one blob, mapInPandas on
-        the scan partitions). Stage 2 refines only the bloom-positive rows
-        against the PARTITIONED cuckoo table: candidates cogroup with the
-        table on pid — executor-side lookups against executor-side state, no
-        driver collect and no multi-GB broadcast dict at high P.
+        One cogroup of the links with the PARTITIONED cuckoo table on pid:
+        each group tests the broadcast bloom, then the pid's cuckoo for the
+        bloom-positive rows only — executor-side lookups against
+        executor-side state, no driver collect and no multi-GB broadcast
+        dict at high P. Bloom-negative links ride the pid exchange too; that
+        costs a shuffle of (url, depth) and saves a second Python stage.
         """
-        from pyspark.sql.types import BooleanType, StructField, StructType
-
-        sc = self.spark.sparkContext
-        b_bloom = sc.broadcast(bloom_blob)
+        b_bloom = self.spark.sparkContext.broadcast(bloom_blob)
         P = self.cfg.cuckoo_partitions
 
-        def bloom_check(pdfs):
-            bf = BloomFilter.from_bytes(b_bloom.value)
-            for pdf in pdfs:
-                if pdf.empty:
-                    pdf["maybe_seen"] = pd.Series([], dtype=bool)
-                    yield pdf
-                    continue
-                pdf = pdf.copy()
-                pdf["maybe_seen"] = bf.contains_many(
-                    pdf["h"].to_numpy().view(np.uint64)
-                )
-                yield pdf
-
-        hashed = links.withColumn("h", F.xxhash64("url")).withColumn(
-            "pid", F.pmod(F.xxhash64("url"), F.lit(P)).cast("int")
-        )
-        # fresh StructType: mutating a DataFrame's cached schema in place is
-        # not visible JVM-side and breaks mapInPandas resolution.
-        out_schema = StructType(
-            list(hashed.schema.fields) + [StructField("maybe_seen", BooleanType())]
-        )
-        # The bloom subtree (links explode → min-depth groupBy → mapInPandas)
-        # is referenced by up to 4 branches of the single expand action
-        # (candidates/passed × definitely_new/residual); pin it so it
-        # executes once. _run_epoch unpersists after new_frontier.count().
-        flagged = hashed.mapInPandas(bloom_check, out_schema).persist()
-        self._expand_cache.append(flagged)
-
-        cdir = self._cuckoo_dir(cuckoo_epoch)
-        if not Path(cdir).exists():
-            return flagged.drop("h", "pid")
-
-        candidates = flagged.filter(F.col("maybe_seen"))
-        passed = flagged.filter(~F.col("maybe_seen"))
-        cuckoo_tbl = self.spark.read.parquet(cdir)
-
-        def cuckoo_check(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return left
-            left = left.copy()
-            if right.empty:
-                left["maybe_seen"] = False
-            else:
+        def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            hs = left["h"].to_numpy().view(np.uint64)
+            maybe = BloomFilter.from_bytes(b_bloom.value).contains_many(hs)
+            if right.empty:  # no url of this pid was ever inserted
+                maybe[:] = False
+            elif maybe.any():
                 cf = CuckooFilter.from_bytes(bytes(right["blob"].iloc[0]))
-                left["maybe_seen"] = cf.contains_many(
-                    left["h"].to_numpy().view(np.uint64)
-                )
-            return left
+                maybe[maybe] = cf.contains_many(hs[maybe])
+            return left.assign(maybe_seen=maybe)
 
-        refined = (
-            candidates.groupBy("pid")
-            .cogroup(cuckoo_tbl.groupBy("pid"))
-            .applyInPandas(cuckoo_check, out_schema)
+        hashed = links.select(
+            "url",
+            "depth",
+            F.xxhash64("url").alias("h"),
+            F.pmod(F.xxhash64("url"), F.lit(P)).cast("int").alias("pid"),
         )
-        return refined.unionByName(passed).drop("h", "pid")
+        cuckoo_tbl = self.spark.read.parquet(self._cuckoo_dir(cuckoo_epoch))
+        return (
+            hashed.groupBy("pid")
+            .cogroup(cuckoo_tbl.groupBy("pid"))
+            .applyInPandas(probe, "url string, depth int, h long, pid int, maybe_seen boolean")
+            .drop("h", "pid")
+        )
 
     # -- fetch source -------------------------------------------------------
 
@@ -692,12 +674,17 @@ class CrawlEngine:
             F.col("x.reviews").alias("reviews"),
             F.col("x.links").alias("links"),
             F.col("x.error").alias("extract_error"),
-        ).observe(obs, F.count(F.lit(1)).alias("n"))
+        ).observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.count("extract_error").alias("extract_errors"),
+        )
         # written straight off the scan partitions: extraction + write is ONE
         # stage, and the fat extracted structs (company/reviews/links) never
         # shuffle — one results file per fetch-scan task
         results.write.mode("overwrite").parquet(epoch_dir("results"))
         fetched_n = int(obs.get["n"])
+        extract_errors = int(obs.get["extract_errors"])
         res = self.spark.read.parquet(epoch_dir("results"))
         t_step = _lap("fetch_extract_write", t_step)
 
@@ -741,7 +728,7 @@ class CrawlEngine:
                 .agg(F.min("depth").alias("depth"))
             )
             seen = self._read_seen_through(epoch - 1)
-            self._expand_cache = []
+            flagged = None
             # join the previous epoch's deferred sketch build here — it had
             # the whole drain/fetch/extract to finish, so this wait is ~0 on
             # the happy path (recorded honestly when it is not)
@@ -749,7 +736,11 @@ class CrawlEngine:
             bloom = self._resolve_bloom(epoch - 1)
             steps["sketch_wait"] = round(_t() - t_bw, 3)
             if cfg.use_sketches and bloom is not None:
-                flagged = self._sketch_prefilter(links, bloom, cuckoo_epoch=epoch - 1)
+                # pinned: both branches below read it, and the probe is a
+                # Python stage; unpersisted once the commits are done
+                flagged = self._sketch_prefilter(
+                    links, bloom, cuckoo_epoch=epoch - 1
+                ).persist()
                 definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
                 residual = (
                     flagged.filter(F.col("maybe_seen"))
@@ -813,9 +804,8 @@ class CrawlEngine:
         finally:
             epoch_pool.shutdown(wait=True)
         new_frontier.unpersist()
-        for cached in self._expand_cache:
-            cached.unpersist()
-        self._expand_cache = []
+        if flagged is not None:
+            flagged.unpersist()
         t_step = _lap("frontier_commit", t_step)
 
         # 7. sketches build DEFERRED: submitted against the committed delta
@@ -836,6 +826,7 @@ class CrawlEngine:
             "batch": batch_n,
             "urls_fetched": fetched_n,
             "urls_missing": batch_n - fetched_n,
+            "extract_errors": extract_errors,
             "new_urls": new_n,
             "pending_after": pending_after,
             "wall_sec": round(time.time() - t0, 3),

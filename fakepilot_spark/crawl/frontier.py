@@ -11,8 +11,9 @@ identical seed list and politeness budget", BASELINE.json:6).
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -24,6 +25,7 @@ from pyspark.sql.types import (
 __all__ = [
     "FRONTIER_SCHEMA",
     "host_of",
+    "local_df",
     "path_of",
     "with_frontier_columns",
     "seeds_frontier",
@@ -92,6 +94,15 @@ def with_frontier_columns(df: DataFrame, depth, epoch: int, state: str = "pendin
     )
 
 
-def seeds_frontier(spark, seed_urls: list) -> DataFrame:
-    seeds = spark.createDataFrame([(u,) for u in seed_urls], "url string").distinct()
+def local_df(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """A JVM-local relation (``LocalTableScan``, shipped through Arrow):
+    unlike ``createDataFrame(list)``, which plans as ``Scan ExistingRDD``,
+    reading it starts no Python worker."""
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+
+
+def seeds_frontier(spark: SparkSession, seed_urls: list) -> DataFrame:
+    seeds = local_df(
+        spark, [(u,) for u in seed_urls], StructType([StructField("url", StringType())])
+    ).distinct()
     return with_frontier_columns(seeds, F.lit(0), epoch=0)

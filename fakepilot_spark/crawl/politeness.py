@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .frontier import path_of
+from .frontier import local_df, path_of
 
 ROBOTS_SCHEMA = StructType(
     [
@@ -40,14 +40,12 @@ POLITENESS_SCHEMA = StructType(
 def robots_df(spark: SparkSession, rules: dict) -> DataFrame:
     """rules: host -> (disallow_prefixes, crawl_delay_seconds)."""
     rows = [(h, list(d), float(cd)) for h, (d, cd) in sorted(rules.items())]
-    if not rows:
-        rows = []
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return local_df(spark, rows, ROBOTS_SCHEMA)
 
 
 def politeness_df(spark: SparkSession, budgets: dict) -> DataFrame:
     rows = [(h, int(b)) for h, b in sorted(budgets.items())]
-    return spark.createDataFrame(rows, POLITENESS_SCHEMA)
+    return local_df(spark, rows, POLITENESS_SCHEMA)
 
 
 def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:

@@ -8,8 +8,8 @@ From-scratch NumPy implementations of two public constructions:
   the dominant shuffle (only the maybe-seen residual is joined).
 * Cuckoo filter (Fan et al., CoNEXT 2014) — 4-way buckets, 16-bit
   fingerprints, deterministic eviction. Supports deletion (bloom cannot),
-  used as the per-partition compact seen-set: fragments merge per pid in a
-  distributed groupBy + applyInPandas into a partitioned state table
+  used as the per-partition compact seen-set: one table per pid, kept as a
+  partitioned state table and carried forward from epoch to epoch
   (partition-disjoint key spaces make merge = disjoint union).
 
 Both operate on pre-computed unsigned 64-bit key hashes — at scale those are

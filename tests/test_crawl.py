@@ -6,13 +6,16 @@ identical state (north rule, BASELINE.json:6,14).
 
 from __future__ import annotations
 
-import shutil
+import json
 
+import numpy as np
+import pyspark.sql.functions as F
 import pytest
 
 from fakepilot_spark.corpus import synth_pages
 from fakepilot_spark.crawl.engine import CrawlConfig, CrawlEngine
 from fakepilot_spark.crawl.oracle import oracle_crawl
+from fakepilot_spark.crawl.sketches import BloomFilter, CuckooFilter
 from fakepilot_spark.extract.fields import link_hrefs
 from fakepilot_spark.htmlmini import parse
 
@@ -129,6 +132,7 @@ def test_extraction_outputs_present(engine_run):
     engine, summary = engine_run
     companies = engine.companies_df()
     assert companies.filter("extract_error is not null").count() == 0
+    assert [ep["extract_errors"] for ep in summary["epochs"]] == [0] * len(summary["epochs"])
     assert companies.count() == summary["total_fetched"]
     reviews = engine.reviews_df()
     assert reviews.count() > 0
@@ -191,5 +195,67 @@ def test_resume_rebuilds_missing_sketches(spark, corpus_df, tmp_path_factory, en
     e2 = _mk_engine(spark, corpus_df, ckpt)  # fresh engine = process restart
     e2.run()
     assert e2.fetched_urls_in_order() == full_engine.fetched_urls_in_order()
-    # the rebuilt sketches were committed under the epoch that lacked them
+    # the rebuilt sketches were committed under the epoch that lacked them,
+    # with every seen URL inserted exactly once
     assert (sk / "bloom.bin").exists()
+    _assert_sketches_hold_seen(spark, e2, last)
+
+
+def _assert_sketches_hold_seen(spark, engine, epoch):
+    """Every URL of the delta union through ``epoch`` probes positive against
+    that epoch's ``bloom.bin`` and its pid's cuckoo row, and the cuckoo
+    tables hold exactly one insert per seen URL (carried forward, never
+    re-inserted)."""
+    sk = engine.ckpt / "sketches" / f"epoch={epoch}"
+    hs = np.array(
+        [r["h"] for r in engine._read_seen_through(epoch).select(F.xxhash64("url").alias("h")).collect()],
+        dtype=np.int64,
+    )
+    bloom = BloomFilter.from_bytes((sk / "bloom.bin").read_bytes())
+    assert bloom.contains_many(hs.view(np.uint64)).all()
+    tables = {
+        r["pid"]: CuckooFilter.from_bytes(bytes(r["blob"]))
+        for r in spark.read.parquet(str(sk / "cuckoo")).collect()
+    }
+    pids = hs % engine.cfg.cuckoo_partitions  # == pmod(xxhash64(url), P)
+    for pid in np.unique(pids):
+        assert tables[pid].contains_many(hs[pids == pid].view(np.uint64)).all(), pid
+    assert sum(t.n_items for t in tables.values()) == len(hs)
+
+
+def test_sketches_hold_every_seen_url(engine_run, spark):
+    """The last built epoch's sketches have no false negative on the seen
+    set, and no URL was enqueued twice across ``new/epoch=*``."""
+    engine, summary = engine_run
+    built = [
+        e for e in range(-1, engine.last_committed_epoch() + 1)
+        if (engine.ckpt / "sketches" / f"epoch={e}" / "bloom.bin").exists()
+    ]
+    assert max(built) >= 1, built  # at least one carried-forward build
+    _assert_sketches_hold_seen(spark, engine, max(built))
+    deltas = spark.read.parquet(str(engine.ckpt / "new")).select("url")
+    assert deltas.count() == deltas.distinct().count()
+
+
+def test_manifest_counts_extract_errors(spark, corpus_df, tmp_path):
+    """Pages that fail extraction are counted in the manifest, from the
+    results write's own observation."""
+    bad = spark.createDataFrame(
+        [("https://bad.example.com/a", b"<html></html>"), ("https://bad.example.com/b", b"")],
+        "url string, html binary",
+    )
+    pages = corpus_df.select("url", "warc_ts", "html").unionByName(
+        bad.select("url", F.lit(None).cast("timestamp").alias("warc_ts"), "html")
+    )
+    cfg = CrawlConfig(
+        checkpoint_dir=str(tmp_path),
+        seeds=SEEDS[:2] + ["https://bad.example.com/a", "https://bad.example.com/b"],
+        max_epochs=1,
+        global_batch=12,
+        nreviews=2,
+        use_sketches=False,
+    )
+    summary = CrawlEngine(spark, pages, cfg).run()
+    manifest = json.loads((tmp_path / "manifests" / "epoch_00000.json").read_text())
+    assert manifest["extract_errors"] == summary["epochs"][0]["extract_errors"] == 2
+    assert manifest["urls_fetched"] == 4

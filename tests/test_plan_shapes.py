@@ -10,10 +10,14 @@ refactor cannot silently reintroduce one:
   never a TakeOrderedAndProject over the full admitted frontier;
 * every registry query — no CartesianProduct, and any Python UDF stage is
   Arrow-vectorized (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas),
-  never row-at-a-time BatchEvalPython.
+  never row-at-a-time BatchEvalPython;
+* the crawl's Python stages — the drain runs none, the sketch build and the
+  sketch probe one each.
 """
 
 from __future__ import annotations
+
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -157,3 +161,97 @@ def test_no_cartesian_no_rowwise_python(spark, name):
     assert "CartesianProduct" not in plan, name
     # any Python stage must be Arrow-batched
     assert "BatchEvalPython" not in plan, name
+
+
+_PYTHON_NODE = re.compile(
+    r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|PythonMapInArrow"
+    r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|Scan ExistingRDD)\b"
+)
+
+
+def _python_nodes(plan: str) -> list:
+    return _PYTHON_NODE.findall(plan)
+
+
+def _sketch_engine(spark, tmp_path):
+    """A plan-only engine whose epoch-0 cuckoo table exists on disk."""
+    from fakepilot_spark.crawl.engine import CrawlConfig, CrawlEngine
+
+    eng = CrawlEngine.__new__(CrawlEngine)
+    eng.spark = spark
+    eng.cfg = CrawlConfig(checkpoint_dir=str(tmp_path), seeds=[], cuckoo_partitions=4)
+    eng.ckpt = tmp_path
+    spark.createDataFrame([(0, b"")], "pid int, blob binary").write.parquet(
+        eng._cuckoo_dir(0)
+    )
+    return eng
+
+
+def _links(spark):
+    # the expand step's shape: exploded links deduplicated to min depth
+    return (
+        spark.range(0, 200)
+        .select(
+            F.concat(F.lit("https://h/"), (F.col("id") % 50).cast("string")).alias("url"),
+            F.lit(1).alias("depth"),
+        )
+        .groupBy("url")
+        .agg(F.min("depth").alias("depth"))
+    )
+
+
+def test_crawl_drain_runs_no_python(spark):
+    """Seeds, robots and politeness are JVM-local relations: the drain plan
+    (robots filter, crawl-delay and budget joins, two-phase rank) scans
+    ``LocalTableScan``s, never a Python-backed ``Scan ExistingRDD``."""
+    from fakepilot_spark.crawl.engine import CrawlEngine
+    from fakepilot_spark.crawl.frontier import seeds_frontier
+    from fakepilot_spark.crawl.politeness import (
+        admit_per_host,
+        apply_robots,
+        politeness_df,
+        robots_df,
+    )
+
+    robots = robots_df(spark, {"h1.example.com": (["/private"], 30.0)})
+    politeness = politeness_df(spark, {"h1.example.com": 1})
+    frontier = seeds_frontier(
+        spark, [f"https://h{i % 3}.example.com/p{i}" for i in range(20)]
+    )
+    admitted = admit_per_host(
+        apply_robots(frontier, robots), politeness, 2,
+        robots=robots, epoch_seconds=60.0,
+    )
+    eng = CrawlEngine.__new__(CrawlEngine)
+    eng.spark = spark
+    plan = _plan(eng._drain_batch(admitted, 10, pending_n=None))
+    assert "LocalTableScan" in plan
+    assert _python_nodes(plan) == [], plan
+
+
+def test_sketch_probe_is_one_cogroup(spark, tmp_path):
+    """Bloom and cuckoo are tested in ONE Python node, a cogroup of the links
+    with the cuckoo table on pid. The link side shuffles twice (min-depth
+    dedupe on url, then pid), the cuckoo side once."""
+    from fakepilot_spark.crawl.sketches import BloomFilter
+
+    eng = _sketch_engine(spark, tmp_path)
+    bloom = BloomFilter.for_capacity(100).to_bytes()
+    plan = _plan(eng._sketch_prefilter(_links(spark), bloom, cuckoo_epoch=0))
+    assert _python_nodes(plan) == ["FlatMapCoGroupsInPandas"], plan
+    assert plan.count("Exchange hashpartitioning") == 3, plan
+
+
+def test_sketch_build_is_one_map_in_pandas(spark, tmp_path):
+    """The build is one MapInPandas over the new hashes and the carried-forward
+    cuckoo rows, shuffled once by pid — no per-pid merge stage, no RDD."""
+    from fakepilot_spark.crawl.sketches import BloomFilter
+
+    eng = _sketch_engine(spark, tmp_path)
+    urls = _links(spark).select("url")
+    plan = _plan(eng._sketch_rows(urls, 1, BloomFilter.for_capacity(100)))
+    assert _python_nodes(plan) == ["MapInPandas"], plan
+    # the previous epoch's cuckoo table is an input, unioned below the one
+    # pid shuffle
+    assert "Union" in plan and "struct<pid:int,blob:binary>" in plan
+    assert "REPARTITION_BY_NUM" in plan

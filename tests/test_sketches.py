@@ -10,9 +10,12 @@ precondition).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from fakepilot_spark.crawl.engine import sketch_builder
 from fakepilot_spark.crawl.sketches import BloomFilter, CuckooFilter
 
 hashes = st.lists(
@@ -121,3 +124,54 @@ def test_cuckoo_fpp_reasonable():
     cf.add_many(items)
     fp = cf.contains_many(np.setdiff1d(probes, items)).mean()
     assert fp < 0.01  # 16-bit fingerprints → ~2^-13 theoretical
+
+
+@pytest.mark.parametrize("n_batches", [1, 3])
+def test_sketch_builder_carries_tables_forward(n_batches):
+    """The build function on batches that mix both row kinds: carried
+    (pid, h=0, blob) rows and new (pid, h, null) rows. Each pid's table is
+    carried forward and takes only its new hashes — none re-inserted; a pid
+    with no new hashes passes through unchanged; the bloom fragment holds the
+    new hashes. Hashes span the full 64-bit range, so any float rounding of
+    ``h`` shows as a false negative."""
+    P, cap = 4, 1024
+    rng = np.random.default_rng(7)
+    full = np.iinfo(np.int64)
+    old = rng.integers(full.min, full.max, size=400, dtype=np.int64)
+    new = rng.integers(full.min, full.max, size=300, dtype=np.int64)
+    new = new[new % P != 0]  # pid 0 gets no new hashes
+    carried = {}
+    for pid in range(P - 1):  # pid P-1 has no carried table
+        cf = CuckooFilter.for_capacity(cap)
+        cf.add_many(old[old % P == pid].view(np.uint64))
+        carried[pid] = cf.to_bytes()
+    batch = pd.concat(
+        [
+            pd.DataFrame({"pid": (new % P).astype(np.int32), "h": new, "blob": None}),
+            pd.DataFrame({
+                "pid": np.array(list(carried), dtype=np.int32),
+                "h": np.zeros(len(carried), dtype=np.int64),
+                "blob": list(carried.values()),
+            }),
+        ],
+        ignore_index=True,
+    ).sample(frac=1.0, random_state=1)  # interleave the two kinds
+    proto = BloomFilter.for_capacity(4096)
+    build = sketch_builder(proto.n_bits, proto.n_hashes, cap)
+    chunks = [batch.iloc[i] for i in np.array_split(np.arange(len(batch)), n_batches)]
+    out = pd.concat(list(build(iter(chunks))))
+
+    rows = dict(zip(out["pid"].tolist(), out["blob"]))
+    assert sorted(rows) == [-1, 0, 1, 2, 3]
+    assert rows[0] == carried[0]
+    bloom = BloomFilter.from_bytes(rows[-1])
+    assert bloom.contains_many(new.view(np.uint64)).all()
+    for pid in range(P):
+        cf = CuckooFilter.from_bytes(rows[pid])
+        mine_old, mine_new = old[old % P == pid], new[new % P == pid]
+        if pid in carried:
+            assert cf.contains_many(mine_old.view(np.uint64)).all()
+        else:
+            mine_old = mine_old[:0]
+        assert cf.contains_many(mine_new.view(np.uint64)).all()
+        assert cf.n_items == len(mine_old) + len(mine_new)

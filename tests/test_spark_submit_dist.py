@@ -5,11 +5,12 @@ dist/fakepilot_spark.zip jobs/crawl_job.py`` (BASELINE.json:6). The unit
 suite imports the package from the repo checkout, so packaging bugs (a
 module missing from the zip, an import that only resolves against the
 checkout, a job script that secretly needs the repo on sys.path) are
-invisible to it. This test builds the zip fresh, copies the job script to
-a directory OUTSIDE the repo (the script prepends only its own parent
-tree to sys.path), and runs a real spark-submit: every fakepilot_spark
-import must resolve from the --py-files zip alone, exactly as on a
-cluster whose executors never see the checkout.
+invisible to it. This test builds the zip fresh into a temporary
+directory (the committed zip is only compared with it, never rewritten),
+copies the job script to a directory OUTSIDE the repo (the script prepends
+only its own parent tree to sys.path), and runs a real spark-submit: every
+fakepilot_spark import must resolve from the --py-files zip alone, exactly
+as on a cluster whose executors never see the checkout.
 """
 
 from __future__ import annotations
@@ -28,25 +29,41 @@ REPO = Path(__file__).resolve().parent.parent
 
 
 @pytest.fixture(scope="module")
-def dist_zip() -> Path:
+def dist_zip(tmp_path_factory) -> Path:
+    path = tmp_path_factory.mktemp("dist") / "fakepilot_spark.zip"
     out = subprocess.run(
-        [sys.executable, str(REPO / "scripts" / "build_dist.py")],
+        [sys.executable, str(REPO / "scripts" / "build_dist.py"), str(path)],
         capture_output=True, text=True, check=True, cwd=str(REPO),
     )
-    path = REPO / "dist" / "fakepilot_spark.zip"
     assert path.exists(), out.stdout
     return path
 
 
+def _entries(path: Path) -> dict:
+    with zipfile.ZipFile(path) as zf:
+        return {name: zf.read(name) for name in zf.namelist()}
+
+
 def test_zip_contains_every_package_module(dist_zip):
-    with zipfile.ZipFile(dist_zip) as zf:
-        shipped = set(zf.namelist())
+    shipped = set(_entries(dist_zip))
     expected = {
-        str(p.relative_to(REPO))
+        p.relative_to(REPO).as_posix()
         for p in (REPO / "fakepilot_spark").rglob("*.py")
     }
     assert expected, "package has no modules?"
     assert expected <= shipped, sorted(expected - shipped)
+
+
+def test_committed_zip_matches_sources(dist_zip):
+    """The committed dist/fakepilot_spark.zip ships exactly the current
+    sources: same entry names, same decompressed bytes as a fresh build
+    (compressed bytes may differ with the zlib build, so they are not
+    compared)."""
+    committed = _entries(REPO / "dist" / "fakepilot_spark.zip")
+    fresh = _entries(dist_zip)
+    assert sorted(committed) == sorted(fresh)
+    stale = [name for name in fresh if committed[name] != fresh[name]]
+    assert not stale, f"rebuild with scripts/build_dist.py: {stale}"
 
 
 def test_spark_submit_py_files_runs_without_repo_on_path(dist_zip, tmp_path):
