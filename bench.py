@@ -13,9 +13,10 @@ Headline components:
 * representative operator queries from the driver contract (forced with a
   noop write so timing measures execution, not result transfer).
 
-Scaling evidence (north rule ≥0.8 N→4N): scripts/scaling_bench.py runs this
-file in fresh subprocesses at local[8] and local[32] and writes
-BENCH/BASELINE.md.
+Scaling evidence (north rule ≥0.8 N→4N) and per-layer timings come from
+perfbench/run.py, which runs on local[<cores>] with the core count taken from
+CPU affinity: ``taskset -c 0`` vs ``taskset -c 0-3`` gives local[1]→local[4]
+(perfbench/README.md).
 """
 
 from __future__ import annotations

@@ -127,11 +127,11 @@ class CrawlEngine:
         )
         self._robots = robots_df(spark, config.robots_rules)
         self._politeness = politeness_df(spark, config.host_budgets)
-        # deferred sketch build (round-4 verdict item 3): epoch N's sketch
-        # build runs on this 1-worker pool, overlapping epoch N+1's
-        # drain/fetch/extract instead of sitting on N's critical path. The
-        # single worker serializes builds (N's build always finishes before
-        # N+1's is submitted — N+1 joins the future before its expand).
+        # deferred sketch build: epoch N's sketch build runs on this
+        # 1-worker pool, overlapping epoch N+1's drain/fetch/extract instead
+        # of sitting on N's critical path. The single worker serializes
+        # builds (N's build always finishes before N+1's is submitted —
+        # N+1 joins the future before its expand).
         self._sketch_pool = None
         self._sketch_future = None
         self._sketch_future_epoch: int | None = None
@@ -698,9 +698,9 @@ class CrawlEngine:
         # The try/finally opens IMMEDIATELY after the pool exists: an
         # exception anywhere in the expand phase below must still join the
         # in-flight lineage write, or an epoch retry could race the stale
-        # thread's mode=overwrite parquet into the same epoch directory
-        # (round-4 ADVICE, medium).
-        epoch_pool = ThreadPoolExecutor(4)
+        # thread's mode=overwrite parquet into the same epoch directory.
+        # Three workers: lineage, delta and frontier.
+        epoch_pool = ThreadPoolExecutor(3)
         try:
             # 4b. lineage runs concurrently; its wall time is recorded from
             # inside the future (the old step label timed only the submit —
@@ -776,13 +776,14 @@ class CrawlEngine:
                 )
             )
 
-            # 5b+6+7 run CONCURRENTLY (on the epoch pool that already carries
-            # the lineage write): the delta commit, the frontier snapshot write,
-            # and the sketch build all read the pinned expansion (or
-            # already-committed parquet) and touch disjoint outputs — driver
-            # threads submit the jobs so the cluster is never idle between
-            # them. The manifest (the atomic commit point) still writes
-            # strictly after every one of them has finished.
+            # 5b+6 run CONCURRENTLY (on the epoch pool that already carries
+            # the lineage write): the delta commit and the frontier snapshot
+            # write both read the pinned expansion and touch disjoint
+            # outputs — driver threads submit the jobs so the cluster is
+            # never idle between them. The sketch build is not among them:
+            # it reads the committed delta, so step 7 submits it once this
+            # pool has joined. The manifest (the atomic commit point) still
+            # writes strictly after every one of them has finished.
 
             def _commit_delta() -> int:
                 new_frontier.observe(

@@ -7,10 +7,10 @@ From-scratch NumPy implementations of two public constructions:
   never seen skip the exact anti-join entirely, which at 10^10 URLs removes
   the dominant shuffle (only the maybe-seen residual is joined).
 * Cuckoo filter (Fan et al., CoNEXT 2014) — 4-way buckets, 16-bit
-  fingerprints, deterministic eviction. Supports deletion (bloom cannot),
-  used as the per-partition compact seen-set: one table per pid, kept as a
-  partitioned state table and carried forward from epoch to epoch
-  (partition-disjoint key spaces make merge = disjoint union).
+  fingerprints, deterministic eviction, insert-only — used as the
+  per-partition compact seen-set: one table per pid, kept as a partitioned
+  state table and carried forward from epoch to epoch (partition-disjoint
+  key spaces make merge = disjoint union).
 
 Both operate on pre-computed unsigned 64-bit key hashes — at scale those are
 produced JVM-side by ``xxhash64(url)`` so Python never touches raw URLs.
@@ -117,10 +117,10 @@ class CuckooFilter:
     def _i1(self, h: np.ndarray) -> np.ndarray:
         return (h & np.uint64(self.n_buckets - 1)).astype(np.int64)
 
-    def _alt(self, i: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        # partial-key cuckoo hashing: i2 = i1 xor H(fp)
-        fph = fp.astype(np.uint64) * np.uint64(0x5BD1E995)
-        return (i.astype(np.uint64) ^ fph).astype(np.int64) & (self.n_buckets - 1)
+    def _alt(self, i, fp):
+        # partial-key cuckoo hashing: i2 = i1 xor H(fp); on ints or int64
+        # arrays (fp < 2^16, so the product never overflows 64 bits)
+        return (i ^ (fp * 0x5BD1E995)) & (self.n_buckets - 1)
 
     def _insert_one(self, i: int, fp: int) -> bool:
         row = self.table[i]
@@ -130,101 +130,56 @@ class CuckooFilter:
             return True
         return False
 
-    def add_many(self, hashes) -> None:
-        h = np.asarray(hashes, dtype=np.uint64)
-        fps = self._fp(h)
-        i1s = self._i1(h)
-        for fp, i1 in zip(fps.tolist(), i1s.tolist()):
-            i2 = int(self._alt(np.array([i1]), np.array([fp], dtype=np.uint16))[0])
-            # One stored copy per insert — duplicates are kept, which is what
-            # makes deletion safe (Fan et al. §3.2: delete removes one copy).
-            # Exception (also per the paper): once BOTH candidate buckets are
-            # full and already hold this fingerprint (2b copies), further
-            # copies are dropped rather than evicting live entries.
-            if (
-                0 not in self.table[i1]
-                and 0 not in self.table[i2]
-                and (fp in self.table[i1] or fp in self.table[i2])
-            ):
-                self.n_items += 1
-                continue
-            if self._insert_one(i1, fp) or self._insert_one(i2, fp):
-                self.n_items += 1
-                continue
+    def _insert(self, i1: int, fp: int) -> None:
+        """Store one fingerprint whose candidate buckets are ``i1`` and its
+        alternate; raises when the eviction chain runs out of kicks."""
+        i2 = self._alt(i1, fp)
+        # One stored copy per insert — duplicates are kept (Fan et al. §3.2).
+        # Exception (also per the paper): once BOTH candidate buckets are
+        # full and already hold this fingerprint (2b copies), further
+        # copies are dropped rather than evicting live entries.
+        saturated = (
+            0 not in self.table[i1]
+            and 0 not in self.table[i2]
+            and (fp in self.table[i1] or fp in self.table[i2])
+        )
+        if not saturated and not (self._insert_one(i1, fp) or self._insert_one(i2, fp)):
             # deterministic eviction chain
             i, cur = i2, fp
             for kick in range(_MAX_KICKS):
                 slot = kick % _SLOTS
                 cur, self.table[i][slot] = int(self.table[i][slot]), cur
-                i = int(
-                    self._alt(np.array([i]), np.array([cur], dtype=np.uint16))[0]
-                )
+                i = self._alt(i, cur)
                 if self._insert_one(i, cur):
-                    cur = None
                     break
-            if cur is not None:
+            else:
                 raise RuntimeError("cuckoo filter full — size for capacity upfront")
-            self.n_items += 1
+        self.n_items += 1
+
+    def add_many(self, hashes) -> None:
+        h = np.asarray(hashes, dtype=np.uint64)
+        for fp, i1 in zip(self._fp(h).tolist(), self._i1(h).tolist()):
+            self._insert(i1, fp)
 
     def contains_many(self, hashes) -> np.ndarray:
         h = np.asarray(hashes, dtype=np.uint64)
         fps = self._fp(h)
         i1 = self._i1(h)
-        i2 = self._alt(i1, fps)
+        i2 = self._alt(i1, fps.astype(np.int64))
         in1 = (self.table[i1] == fps[:, None]).any(axis=1)
         in2 = (self.table[i2] == fps[:, None]).any(axis=1)
         return in1 | in2
 
-    def delete_many(self, hashes) -> int:
-        """Remove one fingerprint copy per present key; returns #deleted."""
-        h = np.asarray(hashes, dtype=np.uint64)
-        deleted = 0
-        for hh in h:
-            fp = int(self._fp(np.array([hh], dtype=np.uint64))[0])
-            i1 = int(self._i1(np.array([hh], dtype=np.uint64))[0])
-            i2 = int(self._alt(np.array([i1]), np.array([fp], dtype=np.uint16))[0])
-            for i in (i1, i2):
-                slots = np.nonzero(self.table[i] == fp)[0]
-                if slots.size:
-                    self.table[i][slots[0]] = 0
-                    deleted += 1
-                    self.n_items -= 1
-                    break
-        return deleted
-
     def merge(self, other: "CuckooFilter") -> "CuckooFilter":
         """Union by re-inserting the other filter's fingerprints through the
-        displacement logic (valid for partition-disjoint key sets)."""
+        displacement logic (valid for partition-disjoint key sets). A stored
+        fingerprint's bucket and its alternate are the key's two candidates,
+        so the bucket it sits in stands in for the key's first one."""
         if other.n_buckets != self.n_buckets:
             raise ValueError("cuckoo parameter mismatch")
-        occupied = np.nonzero(other.table)
-        for i, slot in zip(*occupied):
-            fp = int(other.table[i, slot])
-            i1 = int(i)
-            i2 = int(self._alt(np.array([i1]), np.array([fp], dtype=np.uint16))[0])
-            if (
-                0 not in self.table[i1]
-                and 0 not in self.table[i2]
-                and (fp in self.table[i1] or fp in self.table[i2])
-            ):
-                self.n_items += 1
-                continue
-            if self._insert_one(i1, fp) or self._insert_one(i2, fp):
-                self.n_items += 1
-                continue
-            cur, pos = fp, i2
-            for kick in range(_MAX_KICKS):
-                slot2 = kick % _SLOTS
-                cur, self.table[pos][slot2] = int(self.table[pos][slot2]), cur
-                pos = int(
-                    self._alt(np.array([pos]), np.array([cur], dtype=np.uint16))[0]
-                )
-                if self._insert_one(pos, cur):
-                    cur = None
-                    break
-            if cur is not None:
-                raise RuntimeError("cuckoo filter full during merge")
-            self.n_items += 1
+        rows, slots = np.nonzero(other.table)
+        for i, fp in zip(rows.tolist(), other.table[rows, slots].tolist()):
+            self._insert(i, fp)
         return self
 
     def to_bytes(self) -> bytes:

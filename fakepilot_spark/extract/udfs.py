@@ -26,44 +26,45 @@ from .schemas import PAGE_EXTRACT_STRUCT
 __all__ = ["make_page_extractor"]
 
 
-def _extract_batch(html: pd.Series, nreviews, with_reviews, with_links, strict):
+def _gc_off_map(fn, blobs) -> list:
+    """``[fn(b) for b in blobs]`` with generational GC off for the loop.
+
+    The DOM is acyclic (no parent pointers) → refcounting reclaims
+    everything; generational GC only adds cache-thrashing scans over
+    millions of short-lived nodes. GC comes back on however the loop ends."""
     import gc
 
-    # The DOM is acyclic (no parent pointers) → refcounting reclaims
-    # everything; generational GC only adds cache-thrashing scans over
-    # millions of short-lived nodes. Disable it for the batch.
     gc_was_enabled = gc.isenabled()
     gc.disable()
-    companies, reviews, links, errors = [], [], [], []
-    for blob in html:
-        company = review_list = link_list = error = None
+    try:
+        return [fn(b) for b in blobs]
+    finally:
+        if gc_was_enabled:
+            gc.enable()
+
+
+def _extract_batch(html: pd.Series, nreviews, with_reviews, with_links, strict):
+    def one(blob):
         try:
             dom = parse(blob)
-            raw = company_record(dom)
-            raw["company_url"] = raw.pop("url")
-            company = raw
-            if with_reviews:
-                review_list = review_records(dom, nreviews)
-            if with_links:
-                # only absolute links are frontier candidates (the crawl
-                # engine and the single-threaded oracle both apply exactly
-                # this filter); dropping relative hrefs here keeps thousands
-                # of dead strings per page out of the Arrow result batch.
-                link_list = [h for h in link_hrefs(dom) if h.startswith("http")]
+            company = company_record(dom)
+            company["company_url"] = company.pop("url")
+            review_list = review_records(dom, nreviews) if with_reviews else None
+            # only absolute links are frontier candidates (the crawl
+            # engine and the single-threaded oracle both apply exactly
+            # this filter); dropping relative hrefs here keeps thousands
+            # of dead strings per page out of the Arrow result batch.
+            link_list = (
+                [h for h in link_hrefs(dom) if h.startswith("http")] if with_links else None
+            )
+            return company, review_list, link_list, None
         except Exception as exc:  # noqa: BLE001 - converted to data, not control flow
             if strict:
                 raise
-            company = review_list = link_list = None
-            error = f"{type(exc).__name__}: {exc}"
-        companies.append(company)
-        reviews.append(review_list)
-        links.append(link_list)
-        errors.append(error)
-    if gc_was_enabled:
-        gc.enable()
-    return pd.DataFrame(
-        {"company": companies, "reviews": reviews, "links": links, "error": errors}
-    )
+            return None, None, None, f"{type(exc).__name__}: {exc}"
+
+    rows = _gc_off_map(one, html)
+    return pd.DataFrame(rows, columns=["company", "reviews", "links", "error"])
 
 
 def make_page_extractor(
@@ -124,18 +125,7 @@ def make_search_extractor(limit: int | None = None):
 
     @pandas_udf(schema)
     def extract_cards(html: pd.Series) -> pd.Series:
-        # same batch-loop shape as _extract_batch: one pass over the Arrow
-        # batch with generational GC off for the parse-heavy span (the DOM
-        # is acyclic — refcounting reclaims it; gen-GC only thrashes).
-        import gc
-
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            cards = [search_card_records(blob, limit=limit) for blob in html]
-        finally:
-            if gc_was_enabled:
-                gc.enable()
+        cards = _gc_off_map(lambda blob: search_card_records(blob, limit=limit), html)
         return pd.Series(cards, index=html.index, dtype=object)
 
     return extract_cards

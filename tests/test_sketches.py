@@ -84,22 +84,6 @@ def test_cuckoo_roundtrip_serialization(xs):
         assert back.contains_many(_arr(xs)).all()
 
 
-@given(hashes)
-@settings(max_examples=30, deadline=None)
-def test_cuckoo_delete_removes(xs):
-    xs = list(dict.fromkeys(xs))
-    cf = CuckooFilter.for_capacity(max(len(xs), 16))
-    if not xs:
-        return
-    cf.add_many(_arr(xs))
-    half = xs[: len(xs) // 2]
-    cf.delete_many(_arr(half))
-    # remaining keys still present (no false negatives for survivors)
-    rest = xs[len(xs) // 2 :]
-    if rest:
-        assert cf.contains_many(_arr(rest)).all()
-
-
 @given(hashes, hashes)
 @settings(max_examples=30, deadline=None)
 def test_cuckoo_merge_union(xs, ys):
@@ -114,6 +98,43 @@ def test_cuckoo_merge_union(xs, ys):
     both = xs + ys
     if both:
         assert merged.contains_many(_arr(both)).all()
+
+
+def _distinct_keys(n, seed):
+    rng = np.random.default_rng(seed)
+    return np.unique(rng.integers(0, (1 << 64) - 1, size=n, dtype=np.uint64))
+
+
+def test_cuckoo_add_many_overflow_raises():
+    cf = CuckooFilter.for_capacity(64)
+    with pytest.raises(RuntimeError, match="cuckoo filter full"):
+        cf.add_many(_distinct_keys(400, 5))
+
+
+def test_cuckoo_merge_overflow_raises():
+    """Merge shares add_many's eviction path, so two filters that each fit
+    but together exceed the table raise the same way."""
+    keys = _distinct_keys(200, 6)
+    a = CuckooFilter.for_capacity(64)
+    b = CuckooFilter(a.n_buckets)
+    assert len(keys) > a.table.size
+    a.add_many(keys[:100])
+    b.add_many(keys[100:])
+    with pytest.raises(RuntimeError, match="cuckoo filter full"):
+        a.merge(b)
+
+
+@given(hashes, hashes)
+@settings(max_examples=30, deadline=None)
+def test_cuckoo_merge_counts_items(xs, ys):
+    cap = max(len(xs) + len(ys), 32) * 2
+    a = CuckooFilter.for_capacity(cap)
+    b = CuckooFilter(a.n_buckets)
+    a.add_many(_arr(xs))
+    b.add_many(_arr(ys))
+    n_a, n_b = a.n_items, b.n_items
+    assert (n_a, n_b) == (len(xs), len(ys))
+    assert a.merge(b).n_items == n_a + n_b
 
 
 def test_cuckoo_fpp_reasonable():

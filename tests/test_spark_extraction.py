@@ -77,3 +77,18 @@ def test_golden_reviews_byte_identical(spark_extracted, name):
     including the byte-identity `content` field and parsed timestamps."""
     for review in GOLDENS[name].get("reviews", ()):
         assert review in spark_extracted[name]["reviews"]
+
+
+def test_strict_batch_raise_leaves_gc_enabled():
+    """The batch loop turns generational GC off; a strict-mode raise out of
+    it must still turn GC back on for the rest of the worker's life."""
+    import gc
+
+    import pandas as pd
+
+    from fakepilot_spark.extract.udfs import _extract_batch
+
+    assert gc.isenabled()
+    with pytest.raises(AttributeError):
+        _extract_batch(pd.Series([b"<html><body>x</body></html>"]), 3, True, True, True)
+    assert gc.isenabled()
