@@ -252,6 +252,9 @@ def crawl_bench(spark, sf: float, runs: int = 1) -> list[dict]:
                     "urls_fetched": fetched,
                     "urls_per_sec": round(fetched / wall, 2),
                     "epochs": len(summary["epochs"]),
+                    "extract_errors": sum(
+                        s["extract_errors"] for s in summary["epochs"]
+                    ),
                     "epoch_steps": [s["steps"] for s in summary["epochs"]],
                     "cpu_sec": round(cpu, 1),
                     "cpu_per_url_ms": round(cpu * 1000 / max(fetched, 1), 1),
@@ -291,6 +294,7 @@ def main() -> None:
     per_run["crawl_urls_per_sec"] = [r["urls_per_sec"] for r in crawl_runs]
     per_run["crawl_utilization"] = [r["utilization"] for r in crawl_runs]
     per_run["crawl_cpu_per_url_ms"] = [r["cpu_per_url_ms"] for r in crawl_runs]
+    per_run["crawl_extract_errors"] = [r["extract_errors"] for r in crawl_runs]
 
     q_samples: dict = {name: [] for name in BENCH_QUERIES}
     for _ in range(RUNS):

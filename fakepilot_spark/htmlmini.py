@@ -545,13 +545,9 @@ def parse(markup) -> Tag:
     object (``/root/reference/tests/test_xray.py:77``), so byte-identical
     extraction from a binary ``html`` column requires the same translation.
 
-    Uses the fast tokenizer backend (~2x the stdlib event parser); set
-    ``FAKEPILOT_PARSER=stdlib`` to force the reference backend.
+    Uses the fast tokenizer backend (~2x the stdlib event parser);
+    ``parse_stdlib`` is the reference it is differential-tested against.
     """
-    import os as _os
-
-    if _os.environ.get("FAKEPILOT_PARSER") == "stdlib":
-        return parse_stdlib(markup)
     return parse_fast(markup)
 
 
@@ -714,7 +710,7 @@ def _parse_attr_blob(blob: str) -> dict:
 
 
 def parse_fast(markup) -> Tag:
-    """Fast-path parse; same DOM as :func:`parse` (stdlib backend)."""
+    """Fast-path parse; same DOM as :func:`parse_stdlib`."""
     if isinstance(markup, (bytes, bytearray, memoryview)):
         markup = bytes(markup).decode("utf-8", errors="replace")
         if "\r" in markup:

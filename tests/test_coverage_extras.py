@@ -127,11 +127,6 @@ def test_find_name_plus_attrs_picks_smaller_candidate_list():
     assert dom.find("nosuchtag") is None
 
 
-def test_parser_env_override(monkeypatch):
-    monkeypatch.setenv("FAKEPILOT_PARSER", "stdlib")
-    assert _dom_sig(parse(DOC)) == _dom_sig(parse_stdlib(DOC))
-
-
 def test_long_text_segment_bypasses_cache():
     big = "x" * 10_000
     dom = parse(f"<p>{big}&amp;tail</p>")
