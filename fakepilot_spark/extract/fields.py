@@ -55,53 +55,6 @@ _STAR_WORDS = (("one", 1), ("two", 2), ("three", 3), ("four", 4), ("five", 5))
 _ISO_MILLIS = "%Y-%m-%dT%H:%M:%S.%fZ"  # xray.py:240
 _MONTH_DAY_YEAR = "%B %d, %Y"  # xray.py:314 (C-locale English month names)
 
-_MONTH_NUM = {
-    "January": 1, "February": 2, "March": 3, "April": 4, "May": 5,
-    "June": 6, "July": 7, "August": 8, "September": 9, "October": 10,
-    "November": 11, "December": 12,
-}
-
-
-def _parse_iso_millis(v: str) -> _dt.datetime:
-    """``strptime(v, _ISO_MILLIS)`` with a positional fast path.
-
-    strptime is ~50µs/call and runs once per review; well-formed zero-padded
-    timestamps (the only kind the site emits) decode positionally instead.
-    Anything else falls back to strptime for bit-identical error semantics.
-    """
-    try:
-        if (
-            v[-1] == "Z" and v[4] == "-" and v[7] == "-" and v[10] == "T"
-            and v[13] == ":" and v[16] == ":" and v[19] == "."
-            and v[0:4].isdigit() and v[5:7].isdigit() and v[8:10].isdigit()
-            and v[11:13].isdigit() and v[14:16].isdigit()
-            and v[17:19].isdigit()
-        ):
-            frac = v[20:-1]
-            nf = len(frac)
-            if 1 <= nf <= 6 and frac.isdigit():
-                return _dt.datetime(
-                    int(v[0:4]), int(v[5:7]), int(v[8:10]),
-                    int(v[11:13]), int(v[14:16]), int(v[17:19]),
-                    int(frac) * 10 ** (6 - nf),
-                )
-    except (ValueError, IndexError):
-        pass
-    return _dt.datetime.strptime(v, _ISO_MILLIS)
-
-
-def _parse_month_day_year(v: str) -> _dt.datetime:
-    """``strptime(v, _MONTH_DAY_YEAR)`` with a dict fast path (English
-    month names; case variants / oddities fall back to strptime)."""
-    try:
-        mon, rest = v.split(" ", 1)
-        day, year = rest.split(", ", 1)
-        if day.isdigit() and len(day) <= 2 and year.isdigit() and len(year) <= 4:
-            return _dt.datetime(int(year), _MONTH_NUM[mon], int(day))
-        return _dt.datetime.strptime(v, _MONTH_DAY_YEAR)
-    except (ValueError, KeyError):
-        return _dt.datetime.strptime(v, _MONTH_DAY_YEAR)
-
 COMPANY_FIELD_ORDER = (
     "name", "url", "nreviews", "score", "categories", "email", "phone",
     "address", "is_claimed", "rating_distribution",
@@ -251,12 +204,12 @@ def _review_record(card: Tag) -> dict:
             card.find(attrs={"data-review-label-tooltip-trigger-typography": "true"})
         ),
         "star_rating": float(rating_tag.attrs["data-service-review-rating"]),
-        "date": _parse_iso_millis(when_tag["datetime"]),
+        "date": _dt.datetime.strptime(when_tag["datetime"], _ISO_MILLIS),
         "title": title_tag.string.strip(),
         "content": content,  # byte-identity gate field (BASELINE.json:15)
         "nreviews": int(count_tag.attrs["data-consumer-reviews-count"]),
         "country": _whole_text(country_tag),
-        "date_experience": _parse_month_day_year(exp_raw),
+        "date_experience": _dt.datetime.strptime(exp_raw, _MONTH_DAY_YEAR),
     }
 
 

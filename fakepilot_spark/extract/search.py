@@ -28,9 +28,9 @@ _RX_THOUSANDS = re.compile("[.,\xa0]")
 
 def _card_record(card: Tag) -> dict:
     name_tag = card.find(attrs={"data-search-result-name-typography": "true"})
-    link = card.find(lambda t: t.has_attr("data-search-result-link"))
+    link = card.find(attrs={"data-search-result-link": True})
     score_tag = card.find(attrs={"data-search-result-score-typography": "true"})
-    count_tag = card.find(lambda t: t.has_attr("data-search-result-reviews-count"))
+    count_tag = card.find(attrs={"data-search-result-reviews-count": True})
     loc_tag = card.find(attrs={"data-search-result-location-typography": "true"})
     cat_tag = card.find(attrs={"data-search-result-category-typography": "true"})
     return {
@@ -55,7 +55,5 @@ def search_card_records(html, limit: int | None = None) -> list:
     /root/reference/src/fakepilot/__init__.py:32-36)."""
     dom = html if isinstance(html, Tag) else parse(html)
     scope = dom.find(class_=_RX_RESULT_LIST) or dom
-    cards = scope.find_all(
-        lambda t: t.has_attr("data-search-result-card"), limit=limit
-    )
+    cards = scope.find_all(attrs={"data-search-result-card": True}, limit=limit)
     return [_card_record(c) for c in cards]

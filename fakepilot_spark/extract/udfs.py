@@ -31,7 +31,10 @@ def _gc_off_map(fn, blobs) -> list:
 
     The DOM is acyclic (no parent pointers) → refcounting reclaims
     everything; generational GC only adds cache-thrashing scans over
-    millions of short-lived nodes. GC comes back on however the loop ends."""
+    millions of short-lived nodes. GC comes back on however the loop ends.
+    It stays because it measures: fixture extraction ran at 21.2 ms/page
+    median with GC left on against 17.5 with it off (4-vCPU VM, 17 fixture
+    pages ×2, interleaved runs)."""
     import gc
 
     gc_was_enabled = gc.isenabled()

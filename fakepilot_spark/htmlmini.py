@@ -31,7 +31,10 @@ time; each tag records its subtree span ``[pos+1, end)``. Document-order
 scans — the only traversal bs4 semantics need — are tight index loops over
 that array instead of recursive generators, which makes whole-page scans on
 real 0.3–1 MB pages ~3-5× faster (this is the hot path of the crawl's
-pandas-UDF extraction stage).
+pandas-UDF extraction stage). The first indexed query builds one lazy
+per-document index of position lists keyed by tag name, attribute key, raw
+class string and text value; a ``string=`` query runs its matcher once per
+distinct text value and merges those values' positions.
 
 Parsing uses ``html.parser.HTMLParser`` with ``convert_charrefs=True`` so
 character references (incl. ``&nbsp;`` → ``\xa0``) decode into the same text
@@ -264,23 +267,25 @@ from bisect import bisect_left as _bisect_left
 class _DocIndex:
     """Document-order position indexes over one parsed page's flat array.
 
-    Every list is naturally sorted (built in one pre-order pass), so range
-    restriction to a tag's subtree span is a bisect + early break. The index
-    is a pure acceleration structure: ``_search`` re-verifies the full
-    predicate on every candidate, so query semantics are exactly the scan's.
+    ``name_pos`` is keyed by tag name, ``attr_pos`` by attribute key,
+    ``class_val_pos`` by raw class string and ``text_val_pos`` by string-node
+    text value. Every list is sorted (document order), so range restriction
+    to a tag's subtree span is a bisect + early break. The index is a pure
+    acceleration structure: ``_search`` re-verifies the full predicate on
+    every candidate, so query semantics are exactly the scan's.
     """
 
     __slots__ = ("name_pos", "attr_pos", "class_val_pos", "text_val_pos")
 
     def __init__(self, flat: list) -> None:
-        # One cheap dict op per node: group tags by the *identity* of their
-        # (memoized, shared) attrs dict and strings by the identity of their
-        # (memoized) text object; expand to per-key / per-value indexes once
-        # per distinct group. SSR pages have ~10^4 nodes but only dozens of
-        # distinct attr blobs / short text runs.
+        # Tags are grouped by the *identity* of their attrs dict: the
+        # tokenizer caches hand every repeat of a start tag / attr blob the
+        # same dict, so the per-key / per-class expansion below runs once per
+        # distinct dict (SSR pages: ~10^4 tags, dozens of distinct blobs).
+        # Text is keyed by value, appended in pre-order: already sorted.
         name_pos: dict = {}
         attr_groups: dict = {}  # id(attrs) -> (attrs, [pos...])
-        text_groups: dict = {}  # id(text) -> (text, [pos...])
+        text_val_pos: dict = {}
         for i in range(1, len(flat)):
             node = flat[i]
             if type(node) is Tag:
@@ -298,12 +303,11 @@ class _DocIndex:
                     else:
                         g[1].append(i)
             else:
-                t = node.text
-                g = text_groups.get(id(t))
-                if g is None:
-                    text_groups[id(t)] = (t, [i])
+                lst = text_val_pos.get(node.text)
+                if lst is None:
+                    text_val_pos[node.text] = [i]
                 else:
-                    g[1].append(i)
+                    lst.append(i)
         attr_pos: dict = {}
         class_val_pos: dict = {}
         for a, positions in attr_groups.values():
@@ -320,20 +324,11 @@ class _DocIndex:
                     class_val_pos[c] = list(positions)
                 else:
                     lst.extend(positions)
-        text_val_pos: dict = {}
-        for t, positions in text_groups.values():
-            lst = text_val_pos.get(t)
-            if lst is None:
-                text_val_pos[t] = positions
-            else:
-                lst.extend(positions)
         # interleaved groups concatenate out of order; one Timsort pass per
         # list restores document order (already-sorted lists are O(n)).
         for lst in attr_pos.values():
             lst.sort()
         for lst in class_val_pos.values():
-            lst.sort()
-        for lst in text_val_pos.values():
             lst.sort()
         self.name_pos = name_pos
         self.attr_pos = attr_pos
@@ -377,7 +372,10 @@ def _match_multi(matcher, tokens: list) -> bool:
 # tiny. Keys are VALUE-based (regex pattern+flags, or the plain string
 # matcher itself), never object identity, so semantically equal matchers
 # share entries and temporaries cannot poison the cache via id reuse.
-# Callable matchers get no value key and fall through unmemoized.
+# Callable matchers get no value key and fall through unmemoized. It stays
+# because it measures: fixture extraction without it ran at a paired median
+# ratio of 1.08 (8 pairs, 4-vCPU VM, 17 fixture pages ×2 through
+# udfs._extract_batch).
 _MATCH_MEMO: dict = {}
 _MATCH_MEMO_MAX = 1 << 20  # hard bound; clears (never evicts) past this
 
@@ -569,29 +567,8 @@ from html.parser import (
     tagfind_tolerant as _tagfind,
 )
 
-_CHARREF_HINT = "&"
-
-# SSR markup repeats short text runs (and their entity decodings) thousands
-# of times per page and across pages; memoizing both dedups the unescape work
-# AND shares one str object per distinct segment — less allocation churn is
-# what keeps 32 parallel parser workers off the memory-bandwidth wall.
-_TEXT_CACHE: dict = {}
-_TEXT_CACHE_MAX_LEN = 512
-
-
 def _decode_text(segment: str) -> str:
-    if len(segment) <= _TEXT_CACHE_MAX_LEN:
-        cached = _TEXT_CACHE.get(segment)
-        if cached is not None:
-            return cached
-        out = _unescape(segment) if _CHARREF_HINT in segment else segment
-        if len(_TEXT_CACHE) > 100_000:
-            _TEXT_CACHE.clear()
-        _TEXT_CACHE[segment] = out
-        return out
-    if _CHARREF_HINT in segment:
-        return _unescape(segment)
-    return segment
+    return _unescape(segment) if "&" in segment else segment
 
 
 # Well-formed start tags take this single-regex fast lane; anything it does
@@ -643,52 +620,35 @@ _MARKED_MS_KEYWORDS = frozenset(("if", "else", "endif"))
 
 # SSR markup repeats identical attribute blobs (class strings) thousands of
 # times per page — memoize blob → attrs dict. Tags share the cached dict;
-# attrs are never mutated after construction.
+# attrs are never mutated after construction. It stays because it measures:
+# fixture extraction ran 10–30% slower without it (4-vCPU VM, 17 fixture
+# pages ×2 through udfs._extract_batch).
 _ATTR_BLOB_CACHE: dict = {}
 
 # Whole start-tag token cache: "<div class=...>" → (name, attrs, selfclosing).
 # SSR ballast repeats identical start tags thousands of times per page and
 # across pages; a repeated token costs one find + one slice + one dict hit
 # instead of two regex matches + an attr scan. Only tokens the fast-lane
-# regex matches *exactly* (fm.end() == token end) are cached — a quoted '>'
-# inside an attribute value makes the naive token a non-match, which falls
-# back to the position-anchored regex path below, so semantics are unchanged.
+# regex matches *exactly* (fm.end() == token end) and _SAFE_TOKEN admits are
+# cached — a quoted '>' inside an attribute value makes the naive token a
+# non-match, which falls back to the position-anchored regex path below, so
+# semantics are unchanged. It stays because it measures: disabling it took
+# fixture extraction from 15.8 to 29.6 ms/page (same setup as above).
 _START_TOKEN_CACHE: dict = {}
 
-# Shared string nodes: StrNode is an immutable value object (text, kind) —
-# nothing mutates one after construction (the emit-time run merge replaces
-# the node instead of appending to it) — so identical (kind, text) pairs
-# across a page/batch share one object. SSR ballast repeats ~30 distinct
-# short runs thousands of times per page; sharing removes that allocation
-# churn and makes the doc index's identity-grouping O(distinct).
-_STRNODE_CACHE: dict = {}
-_STRNODE_CACHE_MAX_LEN = 512
 
-
-def _strnode(text: str, kind: int) -> StrNode:
-    if len(text) > _STRNODE_CACHE_MAX_LEN:
-        return StrNode(text, kind)
-    key = (kind, text)
-    node = _STRNODE_CACHE.get(key)
-    if node is None:
-        if len(_STRNODE_CACHE) > 100_000:
-            _STRNODE_CACHE.clear()
-        node = _STRNODE_CACHE[key] = StrNode(text, kind)
-    return node
-
-
-def _parse_attr_blob(blob: str) -> dict:
-    cached = _ATTR_BLOB_CACHE.get(blob)
-    if cached is not None:
-        return cached
+def _parse_attrs(s: str, k: int, end: int) -> dict:
+    """html.parser ``parse_starttag``'s attribute loop over ``s[k:end]``:
+    quotes stripped, entities decoded, names lowercased, first duplicate
+    wins (as in lxml)."""
     d: dict = {}
-    k = len(blob) - len(blob.lstrip())
-    end = len(blob)
     while k < end:
-        m = _attrfind.match(blob, k)
-        # pragma: no branch — blobs come only from _FAST_START group(2),
-        # whose attr alternatives are a strict subset of attrfind_tolerant's
-        # (names exclude '='); the tolerant matcher cannot fail on them
+        m = _attrfind.match(s, k)
+        # pragma: no branch — mirrors stdlib parse_starttag's own loop
+        # guard; attrfind_tolerant accepts any residue
+        # locatestarttagend_tolerant admitted before end (probed:
+        # commas/NUL/junk all match as tolerant names), and _FAST_START
+        # blobs are a strict subset of that
         if not m:  # pragma: no branch
             break
         attrname, rest, attrvalue = m.group(1, 2, 3)
@@ -697,12 +657,20 @@ def _parse_attr_blob(blob: str) -> dict:
         else:
             if attrvalue[:1] == "'" == attrvalue[-1:] or attrvalue[:1] == '"' == attrvalue[-1:]:
                 attrvalue = attrvalue[1:-1]
-            if attrvalue and _CHARREF_HINT in attrvalue:
+            if attrvalue and "&" in attrvalue:
                 attrvalue = _unescape(attrvalue)
         key = attrname.lower()
         if key not in d:
             d[key] = attrvalue
         k = m.end()
+    return d
+
+
+def _parse_attr_blob(blob: str) -> dict:
+    cached = _ATTR_BLOB_CACHE.get(blob)
+    if cached is not None:
+        return cached
+    d = _parse_attrs(blob, len(blob) - len(blob.lstrip()), len(blob))
     if len(_ATTR_BLOB_CACHE) > 100_000:
         _ATTR_BLOB_CACHE.clear()
     _ATTR_BLOB_CACHE[blob] = d
@@ -724,25 +692,20 @@ def parse_fast(markup) -> Tag:
     find = s.find
     startswith = s.startswith
 
-    def emit_text(segment: str, kind: int = TEXT) -> None:
-        parent = stack[-1]
-        contents = parent.contents
+    def emit_text(segment: str) -> None:
+        contents = stack[-1].contents
         if contents:
             last = contents[-1]
-            if type(last) is StrNode and last.kind == kind:
-                # adjacent same-kind runs merge; nodes are shared/immutable,
-                # so merge = replace (the merged-into node is necessarily
-                # the most recent flat append — see StrNode cache note).
-                merged = _strnode(last.text + segment, kind)
-                contents[-1] = merged
-                flat[-1] = merged
+            if type(last) is StrNode and last.kind == TEXT:
+                # lxml yields one text node per uninterrupted run
+                last.text += segment
                 return
-        node = _strnode(segment, kind)
+        node = StrNode(segment, TEXT)
         flat.append(node)
         contents.append(node)
 
     def emit_str(segment: str, kind: int) -> None:
-        node = _strnode(segment, kind)
+        node = StrNode(segment, kind)
         flat.append(node)
         stack[-1].contents.append(node)
 
@@ -851,28 +814,7 @@ def parse_fast(markup) -> Tag:
                     continue
                 tm = _tagfind.match(s, lt + 1)
                 name = tm.group(1).lower()
-                k = tm.end()
-                attrs = {}
-                while k < endpos:
-                    am = _attrfind.match(s, k)
-                    # pragma: no branch — mirrors stdlib parse_starttag's
-                    # own loop guard; attrfind_tolerant accepts any residue
-                    # locatestarttagend_tolerant admitted before endpos
-                    # (probed: commas/NUL/junk all match as tolerant names)
-                    if not am:  # pragma: no branch
-                        break
-                    attrname, rest, attrvalue = am.group(1, 2, 3)
-                    if not rest:
-                        attrvalue = ""
-                    else:
-                        if attrvalue[:1] == "'" == attrvalue[-1:] or attrvalue[:1] == '"' == attrvalue[-1:]:
-                            attrvalue = attrvalue[1:-1]
-                        if attrvalue and _CHARREF_HINT in attrvalue:
-                            attrvalue = _unescape(attrvalue)
-                    key = attrname.lower()
-                    if key not in attrs:
-                        attrs[key] = attrvalue
-                    k = am.end()
+                attrs = _parse_attrs(s, tm.end(), endpos)
             node = Tag(name, attrs, flat)
             node.pos = len(flat)
             flat.append(node)

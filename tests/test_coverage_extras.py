@@ -128,28 +128,25 @@ def test_find_name_plus_attrs_picks_smaller_candidate_list():
 
 
 def test_long_text_segment_bypasses_cache():
+    # a long text run with a trailing entity decodes into one text node
     big = "x" * 10_000
     dom = parse(f"<p>{big}&amp;tail</p>")
     assert dom.find("p").string == big + "&tail"
 
 
 def test_bounded_caches_reset_when_full():
-    """Each tokenizer cache clears itself past 100k entries — fill with
-    dummies and confirm the next parse both trips the reset and still
-    produces a correct DOM."""
+    """Each tokenizer cache clears itself past 100k entries — fill both with
+    dummies and confirm the next parse trips both resets and still produces
+    a correct DOM."""
     filler = {("pad", i): None for i in range(100_001)}
-    for cache in (
-        htmlmini._TEXT_CACHE,
-        htmlmini._STRNODE_CACHE,
-        htmlmini._ATTR_BLOB_CACHE,
-        htmlmini._START_TOKEN_CACHE,
-    ):
+    for cache in (htmlmini._ATTR_BLOB_CACHE, htmlmini._START_TOKEN_CACHE):
+        cache.clear()  # so the tag below misses both caches
         cache.update(filler)
     dom = parse("<div id='fresh'>text &amp; more</div>")
     assert dom.find("div")["id"] == "fresh"
     assert dom.find("div").string == "text & more"
     assert len(htmlmini._START_TOKEN_CACHE) < 100_001
-    assert len(htmlmini._TEXT_CACHE) < 100_001
+    assert len(htmlmini._ATTR_BLOB_CACHE) < 100_001
 
 
 def test_attr_blob_garbage_stops_cleanly():
@@ -210,98 +207,6 @@ def test_search_cards_whole_page_fallback_and_missing_fields():
     assert card["score"] is None and card["nreviews"] is None
     assert card["location"] is None and card["category"] is None
     assert search_card_records("<p>no cards here</p>") == []
-
-
-# -- date fast paths (fields._parse_iso_millis / _parse_month_day_year) ------
-
-import datetime as _dt
-
-import pytest
-from hypothesis import given, strategies as st
-
-from fakepilot_spark.extract.fields import (
-    _ISO_MILLIS,
-    _MONTH_DAY_YEAR,
-    _parse_iso_millis,
-    _parse_month_day_year,
-)
-
-
-@given(
-    st.datetimes(
-        # strftime pads the year platform-dependently below 1000; both paths
-        # reject 3-digit years identically, but the round-trip needs 4 digits
-        min_value=_dt.datetime(1000, 1, 1),
-        max_value=_dt.datetime(9999, 12, 31),
-    )
-)
-def test_iso_millis_fast_path_matches_strptime(dt):
-    v = dt.strftime("%Y-%m-%dT%H:%M:%S.") + f"{dt.microsecond // 1000:03d}Z"
-    assert _parse_iso_millis(v) == _dt.datetime.strptime(v, _ISO_MILLIS)
-
-
-@pytest.mark.parametrize(
-    "v",
-    [
-        "2023-07-04T12:34:56.1Z",       # short fraction (%f accepts 1-6)
-        "2023-07-04T12:34:56.123456Z",  # full microseconds
-        "0001-01-01T00:00:00.000Z",     # min year
-    ],
-)
-def test_iso_millis_accepts_what_strptime_accepts(v):
-    assert _parse_iso_millis(v) == _dt.datetime.strptime(v, _ISO_MILLIS)
-
-
-@pytest.mark.parametrize(
-    "v",
-    [
-        "2023-+6-04T12:34:56.000Z",   # signed month (int() would take it)
-        "2023-07-04T12:34:56.000",    # missing Z
-        "2023-07-04 12:34:56.000Z",   # wrong separator
-        "garbage",
-    ],
-)
-def test_iso_millis_rejects_what_strptime_rejects(v):
-    with pytest.raises(ValueError):
-        _parse_iso_millis(v)
-
-
-@pytest.mark.parametrize(
-    "v",
-    ["July 4, 2023", "July 04, 2023", "february 1, 0099", "December 31, 9999"],
-)
-def test_month_day_year_matches_strptime(v):
-    # 'february' exercises the case-insensitive strptime fallback
-    assert _parse_month_day_year(v) == _dt.datetime.strptime(v, _MONTH_DAY_YEAR)
-
-
-@pytest.mark.parametrize(
-    "v",
-    [
-        "July 4 2023",        # missing comma
-        "July 4, 2023 ",      # trailing space (int() would strip it)
-        "July 004, 2023",     # 3-digit day (%d takes at most 2)
-        "Smarch 4, 2023",     # unknown month
-    ],
-)
-def test_month_day_year_rejects_what_strptime_rejects(v):
-    with pytest.raises(ValueError):
-        _parse_month_day_year(v)
-
-
-@pytest.mark.parametrize(
-    "v",
-    [
-        "2023-07-04T12:34:56.1234567Z",  # 7-digit fraction (%f caps at 6)
-        "2023-07-04T12:34:56.12aZ",      # non-digit fraction
-        "2023-07-04T12:34:56.Z",         # empty fraction (%f needs >= 1)
-    ],
-)
-def test_iso_millis_bad_fraction_falls_back_like_strptime(v):
-    # passes the positional prefix checks, fails the fraction gate -> the
-    # strptime fallback must raise exactly as the reference's strptime does
-    with pytest.raises(ValueError):
-        _parse_iso_millis(v)
 
 
 # -- rating-distribution / entry-point branches ------------------------------
@@ -376,8 +281,7 @@ def test_exact_string_matcher_non_regex():
 
 
 def test_equal_long_texts_are_distinct_index_groups():
-    # long segments bypass the intern cache -> equal VALUES arrive as
-    # distinct objects and the id()-keyed text groups must merge them
+    # equal text VALUES held by distinct str objects share one index key
     big = "y" * 10_000
     dom = parse(f"<p>{big}</p><div>{big}</div>")
     assert len(dom.find_all(string=big)) == 2
