@@ -296,6 +296,10 @@ def main() -> None:
     per_run["crawl_cpu_per_url_ms"] = [r["cpu_per_url_ms"] for r in crawl_runs]
     per_run["crawl_extract_errors"] = [r["extract_errors"] for r in crawl_runs]
 
+    # one untimed pass per query: a query's first run from cold (Python
+    # workers, codegen, file listing) measured 3-12x slower than its repeats
+    for name in BENCH_QUERIES:
+        _force(queries[name](spark, SF_DIR))
     q_samples: dict = {name: [] for name in BENCH_QUERIES}
     for _ in range(RUNS):
         for name in BENCH_QUERIES:

@@ -436,7 +436,7 @@ class CrawlEngine:
                 self._submit_sketch_build(-1, None)
             _manifest_path(self.ckpt, -1).parent.mkdir(exist_ok=True)
             _manifest_path(self.ckpt, -1).write_text(
-                json.dumps({"epoch": -1, "seeded": len(cfg.seeds)})
+                json.dumps({"epoch": -1, "seeded": len(set(cfg.seeds))})
             )
             start_epoch = 0
 

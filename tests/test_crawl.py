@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from fakepilot_spark.corpus import synth_pages
-from fakepilot_spark.crawl.engine import CrawlConfig, CrawlEngine
+from fakepilot_spark.crawl.engine import CrawlConfig, CrawlEngine, _manifest_path
 from fakepilot_spark.crawl.oracle import oracle_crawl
 from fakepilot_spark.crawl.sketches import BloomFilter, CuckooFilter
 from fakepilot_spark.extract.fields import link_hrefs
@@ -235,6 +235,76 @@ def test_sketches_hold_every_seen_url(engine_run, spark):
     _assert_sketches_hold_seen(spark, engine, max(built))
     deltas = spark.read.parquet(str(engine.ckpt / "new")).select("url")
     assert deltas.count() == deltas.distinct().count()
+
+
+def _manifest(engine, epoch):
+    return json.loads(_manifest_path(engine.ckpt, epoch).read_text())
+
+
+def test_manifest_counts_match_committed_tables(engine_run, spark):
+    """Seen-set invariants, checked against the committed tables rather than
+    the manifest's own arithmetic: each epoch's results table holds exactly
+    ``urls_fetched`` rows, and the seed count plus every epoch's ``new_urls``
+    is the distinct URL count of the delta union."""
+    engine, summary = engine_run
+    epochs = range(engine.last_committed_epoch() + 1)
+    manifests = [_manifest(engine, e) for e in epochs]
+    for m in manifests:
+        results = spark.read.parquet(str(engine.ckpt / "results" / f"epoch={m['epoch']}"))
+        assert results.count() == m["urls_fetched"], m["epoch"]
+    seen = spark.read.parquet(str(engine.ckpt / "new")).select("url").distinct().count()
+    assert _manifest(engine, -1)["seeded"] + sum(m["new_urls"] for m in manifests) == seen
+
+
+def test_manifest_seeded_counts_distinct_seeds(spark, corpus_df, tmp_path):
+    """A seed listed twice is enqueued once, and the epoch -1 manifest (which
+    the first drain reads as the pending count) says so."""
+    cfg = CrawlConfig(
+        checkpoint_dir=str(tmp_path),
+        seeds=SEEDS + SEEDS[:1],
+        global_batch=12,
+        use_sketches=False,
+    )
+    engine = CrawlEngine(spark, corpus_df, cfg)
+    engine.run(max_epochs=0)  # seeds only: writes new/epoch=-1 and its manifest
+    seeded = spark.read.parquet(engine._delta_path(-1)).count()
+    assert seeded == len(set(SEEDS))
+    assert _manifest(engine, -1)["seeded"] == seeded
+    assert engine._pending_count(-1) == seeded
+
+
+def test_resume_after_kill_before_bloom_marker(spark, corpus_df, tmp_path_factory, engine_run):
+    """Kill between epoch 1's deferred cuckoo write and its ``bloom.bin``
+    rename, during epoch 2: epoch 1's cuckoo table is on disk but its
+    completion marker is not. The resume must rebuild epoch 1's sketches
+    from the delta union alone; unioning the stale cuckoo rows would insert
+    every fingerprint twice, which the ``n_items == seen`` check catches."""
+    full_engine, _ = engine_run
+    ckpt = tmp_path_factory.mktemp("crawl_bloom_marker")
+    e1 = _mk_engine(spark, corpus_df, ckpt)
+    e1.run(max_epochs=3)
+    sk = ckpt / "sketches" / "epoch=1"
+    assert (sk / "cuckoo").is_dir()
+    _manifest_path(ckpt, 2).unlink()
+    (sk / "bloom.bin").unlink()
+    e2 = _mk_engine(spark, corpus_df, ckpt)  # fresh engine = process restart
+    assert e2.last_committed_epoch() == 1
+    e2.run()
+    assert e2.fetched_urls_in_order() == full_engine.fetched_urls_in_order()
+    _assert_sketches_hold_seen(spark, e2, 1)
+
+
+def test_repeat_crawl_reuses_generated_code(spark, corpus_df, tmp_path, engine_run):
+    """Epochs re-run the same plans, so after one warm crawl an identical
+    crawl must find its generated classes in Spark's codegen cache. With the
+    default 100-entry cache the crawl's working set evicts itself and every
+    repeat recompiles ~260 classes; what remains are plans whose literals
+    change per run (lineage's fetch timestamp)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    _mk_engine(spark, corpus_df, tmp_path).run()
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount() - before
+    assert compiled <= 16, compiled
 
 
 def test_manifest_counts_extract_errors(spark, corpus_df, tmp_path):
