@@ -19,10 +19,11 @@ Architecture (north rule, BASELINE.json:6,14):
   (the sandbox's stand-in for HTTP; AQE splits the mega-host skew).
 * extract = the vectorized pandas-UDF pipeline (company + reviews + links).
 * commit = results (companies+reviews+links)/lineage/new-URL delta/frontier
-  snapshot/sketches written under ``epoch=N`` paths; the union of new-URL
-  deltas through epoch N IS the URL-seen set (one table, column-pruned on
-  read); the epoch manifest JSON is written last and is the atomic commit
-  point — resume replays from the highest manifest.
+  snapshot/sketches written under ``epoch=N`` paths by concurrent jobs of
+  one epoch pool; the union of new-URL deltas through epoch N IS the
+  URL-seen set (one table, column-pruned on read); the epoch manifest JSON
+  is written last and is the atomic commit point — a kill anywhere before
+  it re-runs the epoch, and resume replays from the highest manifest.
 
 Iceberg surface: tables are partitioned Parquet behind stable paths (jars
 absent in sandbox, SURVEY.md §8); on a real cluster the writes become
@@ -39,7 +40,7 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ..extract.udfs import make_page_extractor
 from .frontier import FRONTIER_SCHEMA, score_expr, with_frontier_columns
@@ -127,14 +128,6 @@ class CrawlEngine:
         )
         self._robots = robots_df(spark, config.robots_rules)
         self._politeness = politeness_df(spark, config.host_budgets)
-        # deferred sketch build: epoch N's sketch build runs on this
-        # 1-worker pool, overlapping epoch N+1's drain/fetch/extract instead
-        # of sitting on N's critical path. The single worker serializes
-        # builds (N's build always finishes before N+1's is submitted —
-        # N+1 joins the future before its expand).
-        self._sketch_pool = None
-        self._sketch_future = None
-        self._sketch_future_epoch: int | None = None
         if config.pages_path and config.pages_buckets:
             self._validate_pages_buckets()
 
@@ -264,8 +257,11 @@ class CrawlEngine:
 
     # -- sketches -----------------------------------------------------------
 
+    def _sketch_dir(self, epoch: int) -> Path:
+        return self.ckpt / "sketches" / f"epoch={epoch}"
+
     def _cuckoo_dir(self, epoch: int) -> str:
-        return str(self.ckpt / "sketches" / f"epoch={epoch}" / "cuckoo")
+        return str(self._sketch_dir(epoch) / "cuckoo")
 
     def _sketch_rows(
         self,
@@ -316,30 +312,35 @@ class CrawlEngine:
         epoch: int,
         include_prev_cuckoo: bool = True,
     ) -> bytes:
-        """Build and commit BOTH sketches of ``epoch`` in one Python stage
-        (:meth:`_sketch_rows`). Its persisted output commits as this epoch's
-        cuckoo table, and its bloom fragments are collected and or-ed into
-        ``prev_bloom`` — the one sketch the driver keeps, because
-        broadcasting it is the point. The driver never holds cuckoo state,
-        so P and capacity can scale with the corpus.
+        """Build and commit BOTH sketches of ``epoch`` in one job: the
+        Python stage of :meth:`_sketch_rows` writes this epoch's cuckoo
+        table, and its bloom fragments ride that write as an observed metric
+        and are or-ed into ``prev_bloom`` — the one sketch the driver keeps,
+        because broadcasting it is the point. The driver never holds cuckoo
+        state, so P and capacity can scale with the corpus.
 
-        Returns the merged bloom blob.
+        ``bloom.bin`` is the completion marker: it is removed before the
+        cuckoo write and written after it, so a kill in between (on any
+        attempt) leaves no marker. Returns the merged bloom blob.
         """
+        (self._sketch_dir(epoch) / "bloom.bin").unlink(missing_ok=True)
         bloom = (
             BloomFilter.from_bytes(prev_bloom)
             if prev_bloom is not None
             else BloomFilter.for_capacity(self.cfg.bloom_capacity, self.cfg.bloom_fpp)
         )
-        built = self._sketch_rows(urls, epoch, bloom, include_prev_cuckoo).persist()
-        try:
-            built.filter(F.col("pid") >= 0).write.mode("overwrite").parquet(
-                self._cuckoo_dir(epoch)
-            )
-            for r in built.filter(F.col("pid") == -1).collect():
-                bloom.merge(BloomFilter.from_bytes(bytes(r["blob"])))
-        finally:
-            built.unpersist()
-        return bloom.to_bytes()
+        obs = Observation(f"sketches_{epoch}")
+        self._sketch_rows(urls, epoch, bloom, include_prev_cuckoo).observe(
+            obs,
+            F.collect_list(F.when(F.col("pid") == -1, F.col("blob"))).alias("blooms"),
+        ).filter(F.col("pid") >= 0).write.mode("overwrite").parquet(
+            self._cuckoo_dir(epoch)
+        )
+        for fragment in obs.get["blooms"]:
+            bloom.merge(BloomFilter.from_bytes(bytes(fragment)))
+        blob = bloom.to_bytes()
+        self._write_bloom(epoch, blob)
+        return blob
 
     def _sketch_prefilter(
         self, links: DataFrame, bloom_blob: bytes, cuckoo_epoch: int
@@ -427,13 +428,8 @@ class CrawlEngine:
 
             frontier = seeds_frontier(self.spark, cfg.seeds)
             frontier.write.mode("overwrite").parquet(self._delta_path(-1))
-            if cfg.use_sketches:
-                # DEFERRED like every other epoch's build: the seed sketches
-                # are first needed at epoch 0's expand, so the build overlaps
-                # epoch 0's drain/fetch/extract instead of serializing in
-                # front of the whole crawl. Crash before the build lands →
-                # _resolve_bloom(-1) rebuilds from the committed seed delta.
-                self._submit_sketch_build(-1, None)
+            # no seed sketches here: epoch 0's _resolve_bloom(-1) builds them
+            # from this delta
             _manifest_path(self.ckpt, -1).parent.mkdir(exist_ok=True)
             _manifest_path(self.ckpt, -1).write_text(
                 json.dumps({"epoch": -1, "seeded": len(set(cfg.seeds))})
@@ -441,20 +437,11 @@ class CrawlEngine:
             start_epoch = 0
 
         summaries = []
-        try:
-            for epoch in range(start_epoch, limit):
-                summary = self._run_epoch(epoch, last=epoch == limit - 1)
-                summaries.append(summary)
-                if summary["pending_after"] == 0:
-                    break
-        finally:
-            # join any in-flight deferred build (an early `pending_after == 0`
-            # exit may have submitted one). The LAST epoch never submits a
-            # build: its sketches have no consumer in this run, and a resume
-            # rebuilds them from the committed delta union on first need —
-            # sketches are a derived artifact, the manifest contract covers
-            # results/delta/frontier/lineage only.
-            self._flush_sketches()
+        for epoch in range(start_epoch, limit):
+            summary = self._run_epoch(epoch, last=epoch == limit - 1)
+            summaries.append(summary)
+            if summary["pending_after"] == 0:
+                break
         return {
             "epochs": summaries,
             "total_fetched": sum(s["urls_fetched"] for s in summaries),
@@ -488,78 +475,28 @@ class CrawlEngine:
         )
         lineage.write.mode("overwrite").parquet(lineage_dir)
 
-    def _write_bloom(self, epoch: int, bloom: bytes | None) -> None:
+    def _write_bloom(self, epoch: int, bloom: bytes) -> None:
         """The bloom blob is the one driver-held sketch (it exists to be
         broadcast); the cuckoo table is committed distributedly by
-        :meth:`_build_sketches` under the same epoch directory.
-
-        Written atomically (tmp + rename) and strictly AFTER the cuckoo
-        table: ``bloom.bin`` present ⇒ the epoch's whole sketch set is
-        complete. The deferred-build resume path relies on this marker."""
+        :meth:`_build_sketches` under the same epoch directory. Written
+        atomically (tmp + rename) and strictly AFTER the cuckoo table, so
+        ``bloom.bin`` present ⇒ the epoch's whole sketch set is complete."""
         import os
 
-        d = self.ckpt / "sketches" / f"epoch={epoch}"
+        d = self._sketch_dir(epoch)
         d.mkdir(parents=True, exist_ok=True)
-        if bloom is not None:
-            tmp = d / "bloom.bin.tmp"
-            tmp.write_bytes(bloom)
-            os.replace(tmp, d / "bloom.bin")
-
-    def _read_bloom(self, epoch: int) -> bytes | None:
-        f = self.ckpt / "sketches" / f"epoch={epoch}" / "bloom.bin"
-        return f.read_bytes() if f.exists() else None
-
-    # -- deferred sketch build ---------------------------------------------
-
-    def _submit_sketch_build(self, epoch: int, prev_bloom: bytes | None) -> None:
-        """Queue epoch ``epoch``'s sketch build on the background worker.
-
-        The build reads the COMMITTED delta parquet (never an in-memory
-        DataFrame, so it has no lifetime coupling to the epoch that spawned
-        it) and overlaps the next epoch's drain/fetch/extract — the next
-        epoch joins the future in :meth:`_resolve_bloom` right before its
-        expand phase, which is the first point that needs the sketches."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        if self._sketch_pool is None:
-            self._sketch_pool = ThreadPoolExecutor(
-                1, thread_name_prefix="sketch-build"
-            )
-        delta = self._delta_path(epoch)
-
-        def _build_deferred() -> bytes:
-            urls = (
-                self.spark.read.schema(FRONTIER_SCHEMA)
-                .parquet(delta)
-                .select("url")
-            )
-            blob = self._build_sketches(urls, prev_bloom, epoch)
-            self._write_bloom(epoch, blob)
-            return blob
-
-        self._sketch_future = self._sketch_pool.submit(_build_deferred)
-        self._sketch_future_epoch = epoch
+        tmp = d / "bloom.bin.tmp"
+        tmp.write_bytes(bloom)
+        os.replace(tmp, d / "bloom.bin")
 
     def _resolve_bloom(self, epoch: int) -> bytes | None:
-        """Bloom blob AFTER ``epoch``: join the in-flight deferred build when
-        it is the producer; otherwise read the committed blob; rebuild from
-        the delta union when the blob is missing (crash after the manifest
-        but before the deferred sketch write — the manifest contract covers
-        results/delta/frontier/lineage, sketches are a derived artifact)."""
+        """Bloom blob AFTER ``epoch``: the committed blob, or a rebuild from
+        the delta union when it is missing (the last epoch of a run skips
+        its build; a kill inside a rebuild leaves no marker)."""
         if not self.cfg.use_sketches:
             return None
-        fut = self._sketch_future
-        if fut is not None:
-            # quiesce regardless of epoch match: a stale build (retried
-            # epoch) must finish before this epoch overwrites its inputs.
-            blob = fut.result()
-            self._sketch_future = None
-            if self._sketch_future_epoch == epoch:
-                return blob
-        blob = self._read_bloom(epoch)
-        if blob is None:
-            blob = self._rebuild_sketches(epoch)
-        return blob
+        f = self._sketch_dir(epoch) / "bloom.bin"
+        return f.read_bytes() if f.exists() else self._rebuild_sketches(epoch)
 
     def _rebuild_sketches(self, epoch: int) -> bytes:
         """Sketches for ``epoch`` are missing: rebuild BOTH sketches from the
@@ -568,22 +505,11 @@ class CrawlEngine:
         the rebuild inserts every seen URL itself — unioning the previous
         cuckoo table would double-insert every fingerprint."""
         urls = self._read_seen_through(epoch)
-        bloom = self._build_sketches(
-            urls, None, epoch, include_prev_cuckoo=False
-        )
-        self._write_bloom(epoch, bloom)
-        return bloom
-
-    def _flush_sketches(self) -> None:
-        """Join any in-flight deferred build (run() exit / error paths)."""
-        if self._sketch_future is not None:
-            self._sketch_future.result()
-            self._sketch_future = None
-        if self._sketch_pool is not None:
-            self._sketch_pool.shutdown(wait=True)
-            self._sketch_pool = None
+        return self._build_sketches(urls, None, epoch, include_prev_cuckoo=False)
 
     def _run_epoch(self, epoch: int, last: bool = False) -> dict:
+        from concurrent.futures import ThreadPoolExecutor
+
         cfg = self.cfg
         t0 = time.time()
         steps: dict = {}
@@ -594,117 +520,114 @@ class CrawlEngine:
             steps[name] = round(now - since, 3)
             return now
 
-        t_step = t0
-        pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-            self._frontier_path(epoch - 1)
-        )
-        # bloom(epoch-1) may still be building on the background worker
-        # (deferred sketch build) — it is first needed at the expand phase,
-        # so resolution happens there; drain/fetch/extract proceed without it.
-        bloom: bytes | None = None
-
-        # 1. robots + politeness admission, then the ordered global micro-batch.
-        # Fast paths (semantics-preserving): an empty robots dim filters
-        # nothing; a per-host budget >= global_batch can never exclude a row
-        # that survives the ordered global limit (host rank <= global rank).
-        allowed = (
-            apply_robots(pending, self._robots) if cfg.robots_rules else pending
-        )
-        has_delay = any(
-            d and d > 0 for _, d in cfg.robots_rules.values()
-        )
-        if cfg.host_budgets or cfg.default_budget < cfg.global_batch or has_delay:
-            admitted = admit_per_host(
-                allowed,
-                self._politeness,
-                cfg.default_budget,
-                robots=self._robots if has_delay else None,
-                epoch_seconds=cfg.epoch_seconds,
-            )
-        else:
-            admitted = allowed
-        batch = self._drain_batch(
-            admitted, cfg.global_batch, self._pending_count(epoch - 1)
-        ).cache()
-        # one action materializes the cache AND (for a bucketed corpus)
-        # collects the batch's url-hash bucket set — no separate job for the
-        # fetch-scan pruning metadata.
-        if cfg.pages_path and cfg.pages_buckets:
-            agg_row = batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.collect_set(
-                    F.pmod(F.xxhash64("url"), F.lit(cfg.pages_buckets)).cast("int")
-                ).alias("bks"),
-            ).first()
-            batch_n, batch_buckets = int(agg_row["n"]), list(agg_row["bks"])
-        else:
-            batch_n, batch_buckets = batch.count(), None
-        t_step = _lap("drain", t_step)
-
-        # 2. fetch = join against the pages corpus. The batch (urls only) is
-        # BROADCAST so the fat ``html`` column never shuffles — the corpus
-        # side streams through scan → hash-probe → extract in one stage.
-        # At 10^10 scale a multi-million-URL batch is still only a few
-        # hundred MB of urls vs petabytes of pages; if the batch ever
-        # outgrows broadcast, the fallback is a bucket-co-located join,
-        # never an html shuffle. With a bucketed corpus (pages_path +
-        # pages_buckets) the scan is further pruned to the url-hash
-        # partitions the batch can actually hit — K epochs no longer cost
-        # K full corpus scans.
-        fetched = F.broadcast(batch.select("url", "depth")).join(
-            self._fetch_corpus(batch, buckets=batch_buckets), "url", "inner"
-        )
-
-        # 3. extract (one Arrow batch per partition chunk) on the corpus scan
-        # partitions — no repartition of page bytes. Extraction runs exactly
-        # ONCE: the flattened results (links included) commit to the epoch's
-        # results table in the same job, counts ride along as an observed
-        # metric, and every downstream step re-reads the committed, column-
-        # pruned parquet instead of re-evaluating (or caching) the UDF plan.
-        from pyspark.sql import Observation
-
-        extracted = fetched.select(
-            "url", "depth", "warc_ts", self._extract("html").alias("x")
-        )
-        epoch_dir = lambda name: str(self.ckpt / name / f"epoch={epoch}")  # noqa: E731
-        obs = Observation(f"results_{epoch}")
-        results = extracted.select(
-            "url", "depth", "warc_ts",
-            F.col("x.company").alias("company"),
-            F.col("x.reviews").alias("reviews"),
-            F.col("x.links").alias("links"),
-            F.col("x.error").alias("extract_error"),
-        ).observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.count("extract_error").alias("extract_errors"),
-        )
-        # written straight off the scan partitions: extraction + write is ONE
-        # stage, and the fat extracted structs (company/reviews/links) never
-        # shuffle — one results file per fetch-scan task
-        results.write.mode("overwrite").parquet(epoch_dir("results"))
-        fetched_n = int(obs.get["n"])
-        extract_errors = int(obs.get["extract_errors"])
-        res = self.spark.read.parquet(epoch_dir("results"))
-        t_step = _lap("fetch_extract_write", t_step)
-
-        # 4. lineage: per-partition fetch accounting (north rule fields),
-        # aggregated executor-side from the committed results table. It only
-        # needs the committed parquet and owns a disjoint output directory,
-        # so it runs CONCURRENTLY with the expand phase below (the epoch
-        # pool is joined before the manifest write).
-        from concurrent.futures import ThreadPoolExecutor
-
+        # One pool per epoch carries the epoch's concurrent jobs: the bloom
+        # resolve, lineage, delta, frontier and sketches (at most four at a
+        # time: the resolve is joined before the last three are submitted).
         # The try/finally opens IMMEDIATELY after the pool exists: an
-        # exception anywhere in the expand phase below must still join the
-        # in-flight lineage write, or an epoch retry could race the stale
-        # thread's mode=overwrite parquet into the same epoch directory.
-        # Three workers: lineage, delta and frontier.
-        epoch_pool = ThreadPoolExecutor(3)
+        # exception anywhere in the epoch must still join every in-flight
+        # job, or an epoch retry could race a stale thread's mode=overwrite
+        # parquet into the same epoch directory.
+        epoch_pool = ThreadPoolExecutor(4)
         try:
+            # bloom(epoch-1) is first needed at the expand; resolving it on
+            # the pool overlaps a rebuild (epoch 0's seed sketches, or a
+            # resume's first epoch) with the drain and fetch.
+            fut_bloom = epoch_pool.submit(self._resolve_bloom, epoch - 1)
+            t_step = t0
+            pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
+                self._frontier_path(epoch - 1)
+            )
+
+            # 1. robots + politeness admission, then the ordered global micro-batch.
+            # Fast paths (semantics-preserving): an empty robots dim filters
+            # nothing; a per-host budget >= global_batch can never exclude a row
+            # that survives the ordered global limit (host rank <= global rank).
+            allowed = (
+                apply_robots(pending, self._robots) if cfg.robots_rules else pending
+            )
+            has_delay = any(
+                d and d > 0 for _, d in cfg.robots_rules.values()
+            )
+            if cfg.host_budgets or cfg.default_budget < cfg.global_batch or has_delay:
+                admitted = admit_per_host(
+                    allowed,
+                    self._politeness,
+                    cfg.default_budget,
+                    robots=self._robots if has_delay else None,
+                    epoch_seconds=cfg.epoch_seconds,
+                )
+            else:
+                admitted = allowed
+            batch = self._drain_batch(
+                admitted, cfg.global_batch, self._pending_count(epoch - 1)
+            ).cache()
+            # one action materializes the cache AND (for a bucketed corpus)
+            # collects the batch's url-hash bucket set — no separate job for the
+            # fetch-scan pruning metadata.
+            if cfg.pages_path and cfg.pages_buckets:
+                agg_row = batch.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.collect_set(
+                        F.pmod(F.xxhash64("url"), F.lit(cfg.pages_buckets)).cast("int")
+                    ).alias("bks"),
+                ).first()
+                batch_n, batch_buckets = int(agg_row["n"]), list(agg_row["bks"])
+            else:
+                batch_n, batch_buckets = batch.count(), None
+            t_step = _lap("drain", t_step)
+
+            # 2. fetch = join against the pages corpus. The batch (urls only) is
+            # BROADCAST so the fat ``html`` column never shuffles — the corpus
+            # side streams through scan → hash-probe → extract in one stage.
+            # At 10^10 scale a multi-million-URL batch is still only a few
+            # hundred MB of urls vs petabytes of pages; if the batch ever
+            # outgrows broadcast, the fallback is a bucket-co-located join,
+            # never an html shuffle. With a bucketed corpus (pages_path +
+            # pages_buckets) the scan is further pruned to the url-hash
+            # partitions the batch can actually hit — K epochs no longer cost
+            # K full corpus scans.
+            fetched = F.broadcast(batch.select("url", "depth")).join(
+                self._fetch_corpus(batch, buckets=batch_buckets), "url", "inner"
+            )
+
+            # 3. extract (one Arrow batch per partition chunk) on the corpus scan
+            # partitions — no repartition of page bytes. Extraction runs exactly
+            # ONCE: the flattened results (links included) commit to the epoch's
+            # results table in the same job, counts ride along as an observed
+            # metric, and every downstream step re-reads the committed, column-
+            # pruned parquet instead of re-evaluating (or caching) the UDF plan.
+            extracted = fetched.select(
+                "url", "depth", "warc_ts", self._extract("html").alias("x")
+            )
+            epoch_dir = lambda name: str(self.ckpt / name / f"epoch={epoch}")  # noqa: E731
+            obs = Observation(f"results_{epoch}")
+            results = extracted.select(
+                "url", "depth", "warc_ts",
+                F.col("x.company").alias("company"),
+                F.col("x.reviews").alias("reviews"),
+                F.col("x.links").alias("links"),
+                F.col("x.error").alias("extract_error"),
+            ).observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.count("extract_error").alias("extract_errors"),
+            )
+            # written straight off the scan partitions: extraction + write is ONE
+            # stage, and the fat extracted structs (company/reviews/links) never
+            # shuffle — one results file per fetch-scan task
+            results.write.mode("overwrite").parquet(epoch_dir("results"))
+            fetched_n = int(obs.get["n"])
+            extract_errors = int(obs.get["extract_errors"])
+            res = self.spark.read.parquet(epoch_dir("results"))
+            t_step = _lap("fetch_extract_write", t_step)
+
+            # 4. lineage: per-partition fetch accounting (north rule fields),
+            # aggregated executor-side from the committed results table. It only
+            # needs the committed parquet and owns a disjoint output directory,
+            # so it runs CONCURRENTLY with the expand phase below (the epoch
+            # pool is joined before the manifest write).
             # 4b. lineage runs concurrently; its wall time is recorded from
-            # inside the future (the old step label timed only the submit —
-            # see BASELINE.md "step semantics" note).
+            # inside the future.
             def _timed_lineage():
                 t_l = _t()
                 self._write_lineage(
@@ -729,13 +652,8 @@ class CrawlEngine:
             )
             seen = self._read_seen_through(epoch - 1)
             flagged = None
-            # join the previous epoch's deferred sketch build here — it had
-            # the whole drain/fetch/extract to finish, so this wait is ~0 on
-            # the happy path (recorded honestly when it is not)
-            t_bw = _t()
-            bloom = self._resolve_bloom(epoch - 1)
-            steps["sketch_wait"] = round(_t() - t_bw, 3)
-            if cfg.use_sketches and bloom is not None:
+            bloom = fut_bloom.result()
+            if bloom is not None:
                 # pinned: both branches below read it, and the probe is a
                 # Python stage; unpersisted once the commits are done
                 flagged = self._sketch_prefilter(
@@ -776,14 +694,15 @@ class CrawlEngine:
                 )
             )
 
-            # 5b+6 run CONCURRENTLY (on the epoch pool that already carries
-            # the lineage write): the delta commit and the frontier snapshot
-            # write both read the pinned expansion and touch disjoint
-            # outputs — driver threads submit the jobs so the cluster is
-            # never idle between them. The sketch build is not among them:
-            # it reads the committed delta, so step 7 submits it once this
-            # pool has joined. The manifest (the atomic commit point) still
-            # writes strictly after every one of them has finished.
+            # 5b+6+7 run CONCURRENTLY (on the epoch pool that already
+            # carries the lineage write): the delta commit, the frontier
+            # snapshot and the sketch build all read the pinned expansion
+            # and touch disjoint outputs — driver threads submit the jobs so
+            # the cluster is never idle between them. The manifest (the
+            # atomic commit point) writes strictly after every one of them
+            # has finished. The LAST epoch of the run skips the sketch
+            # build: nothing in this run reads its sketches, and a resume
+            # rebuilds them from the delta union on first need.
 
             def _commit_delta() -> int:
                 new_frontier.observe(
@@ -799,6 +718,10 @@ class CrawlEngine:
 
             fut_delta = epoch_pool.submit(_commit_delta)
             fut_frontier = epoch_pool.submit(_commit_frontier)
+            if bloom is not None and not last:
+                epoch_pool.submit(
+                    self._build_sketches, new_frontier.select("url"), bloom, epoch
+                ).result()
             new_n = fut_delta.result()
             pending_after = fut_frontier.result()
             fut_lineage.result()
@@ -808,19 +731,6 @@ class CrawlEngine:
         if flagged is not None:
             flagged.unpersist()
         t_step = _lap("frontier_commit", t_step)
-
-        # 7. sketches build DEFERRED: submitted against the committed delta
-        # parquet and joined by the NEXT epoch right before its expand —
-        # the build overlaps that epoch's drain/fetch/extract instead of
-        # extending this epoch's critical path. The manifest below commits
-        # results/delta/frontier/lineage; sketches are a derived artifact
-        # (bloom.bin is their completion marker, _resolve_bloom rebuilds
-        # from the delta union when it is missing at resume). The LAST
-        # epoch of the run skips the submit entirely — no epoch in this run
-        # consumes its sketches, and a resume rebuilds on first need.
-        if cfg.use_sketches and not last:
-            self._submit_sketch_build(epoch, bloom)
-            t_step = _lap("seen_sketches_submit", t_step)
 
         summary = {
             "epoch": epoch,
@@ -853,8 +763,8 @@ class CrawlEngine:
         ).select("url", "review_idx", "rv.*")
 
     def fetched_urls_in_order(self) -> list:
-        """Crawl order: (epoch asc, score desc, url asc) — the deterministic
-        total order the oracle must match."""
+        """Crawl order: per epoch, the fetched URLs sorted by url — the
+        form ``oracle_crawl`` reports and the order tests must match."""
         out = []
         for epoch in range(self.last_committed_epoch() + 1):
             path = self.ckpt / "results" / f"epoch={epoch}"

@@ -23,7 +23,7 @@ def main() -> None:
     from fakepilot_spark.htmlmini import parse
     from fakepilot_spark.session import get_spark
 
-    spark = get_spark(app_name="crawl-demo", cores=8, shuffle_partitions=16)
+    spark = get_spark(app_name="crawl-demo")
     pages = synth_pages(spark, n, partitions=8, hosts=11, skew_mega_host=True).cache()
     seeds = [r["url"] for r in pages.select("url").limit(5).collect()]
     robots = {"host3.example.com": (["/review"], 1.0)}

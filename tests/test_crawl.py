@@ -84,9 +84,24 @@ def oracle_result(corpus_dict):
 
 
 @pytest.fixture(scope="module")
-def engine_run(spark, corpus_df, tmp_path_factory):
+def bloom_at_commit():
+    """epoch -> whether its ``bloom.bin`` existed when that epoch's manifest
+    had just been written; filled by ``engine_run``."""
+    return {}
+
+
+@pytest.fixture(scope="module")
+def engine_run(spark, corpus_df, tmp_path_factory, bloom_at_commit):
     ckpt = tmp_path_factory.mktemp("crawl_ckpt")
     engine = _mk_engine(spark, corpus_df, ckpt)
+    run_epoch = engine._run_epoch
+
+    def run_epoch_and_record(epoch, last=False):
+        summary = run_epoch(epoch, last=last)
+        bloom_at_commit[epoch] = (engine.ckpt / "sketches" / f"epoch={epoch}" / "bloom.bin").exists()
+        return summary
+
+    engine._run_epoch = run_epoch_and_record
     summary = engine.run()
     return engine, summary
 
@@ -175,13 +190,10 @@ def test_sketches_do_not_change_results(spark, corpus_df, tmp_path_factory, engi
 
 
 def test_resume_rebuilds_missing_sketches(spark, corpus_df, tmp_path_factory, engine_run):
-    """Manifest-present / sketches-absent state must resume exactly. This is
-    now the NORMAL end-of-run state, not just a crash window: the last epoch
-    of a run never builds sketches (no epoch in that run consumes them), so
-    a resume's first expand rebuilds both sketches from the committed delta
-    union. The deferred-build crash window (a kill between an earlier
-    epoch's manifest and its background sketch write) leaves the identical
-    on-disk state, so this covers both."""
+    """Manifest-present / sketches-absent state must resume exactly. It is
+    the normal end-of-run state: the last epoch of a run never builds
+    sketches (no epoch in that run consumes them), so a resume's first
+    expand rebuilds both sketches from the committed delta union."""
     full_engine, _ = engine_run
     ckpt = tmp_path_factory.mktemp("crawl_sketchloss")
     e1 = _mk_engine(spark, corpus_df, ckpt)
@@ -189,8 +201,8 @@ def test_resume_rebuilds_missing_sketches(spark, corpus_df, tmp_path_factory, en
     last = e1.last_committed_epoch()
     assert last == 1
     sk = ckpt / "sketches" / f"epoch={last}"
-    # the last epoch's sketch build is skipped by design: manifest committed,
-    # sketches absent — exactly what a crash mid-deferred-build leaves behind
+    # the last epoch's sketch build is skipped by design: manifest
+    # committed, sketches absent
     assert not (sk / "bloom.bin").exists()
     e2 = _mk_engine(spark, corpus_df, ckpt)  # fresh engine = process restart
     e2.run()
@@ -274,11 +286,14 @@ def test_manifest_seeded_counts_distinct_seeds(spark, corpus_df, tmp_path):
 
 
 def test_resume_after_kill_before_bloom_marker(spark, corpus_df, tmp_path_factory, engine_run):
-    """Kill between epoch 1's deferred cuckoo write and its ``bloom.bin``
-    rename, during epoch 2: epoch 1's cuckoo table is on disk but its
-    completion marker is not. The resume must rebuild epoch 1's sketches
-    from the delta union alone; unioning the stale cuckoo rows would insert
-    every fingerprint twice, which the ``n_items == seen`` check catches."""
+    """Kill inside a resume's rebuild of epoch 1's sketches (epoch 1 was the
+    last epoch of the run before, so it built none), between the cuckoo
+    write and the ``bloom.bin`` rename: epoch 1's manifest and cuckoo table
+    are on disk, its completion marker is not, and epoch 2 has no manifest
+    (made here from a 3-epoch run by deleting those two files). The next
+    resume must rebuild epoch 1's sketches from the delta union
+    alone; unioning the stale cuckoo rows would insert every fingerprint
+    twice, which the ``n_items == seen`` check catches."""
     full_engine, _ = engine_run
     ckpt = tmp_path_factory.mktemp("crawl_bloom_marker")
     e1 = _mk_engine(spark, corpus_df, ckpt)
@@ -292,6 +307,63 @@ def test_resume_after_kill_before_bloom_marker(spark, corpus_df, tmp_path_factor
     e2.run()
     assert e2.fetched_urls_in_order() == full_engine.fetched_urls_in_order()
     _assert_sketches_hold_seen(spark, e2, 1)
+
+
+def test_manifest_commits_sketches(engine_run, bloom_at_commit):
+    """Each epoch commits its sketches before its manifest, so a manifest
+    implies ``bloom.bin``; only the run's last epoch skips the build."""
+    last = max(bloom_at_commit)
+    assert sorted(bloom_at_commit) == list(range(last + 1))
+    for epoch, present in sorted(bloom_at_commit.items()):
+        assert present == (epoch != last), (epoch, present)
+
+
+def test_resume_after_kill_before_manifest(spark, corpus_df, tmp_path_factory, engine_run):
+    """Kill after epoch 2 wrote every table, its sketches included, but
+    before its manifest. The resume re-runs epoch 2 over its own leftovers;
+    a re-run that read its stale cuckoo rows instead of epoch 1's would
+    insert fingerprints twice, which the ``n_items == seen`` check catches."""
+    full_engine, _ = engine_run
+    ckpt = tmp_path_factory.mktemp("crawl_kill_before_manifest")
+    e1 = _mk_engine(spark, corpus_df, ckpt)
+    e1.run(max_epochs=4)
+    assert (ckpt / "sketches" / "epoch=2" / "bloom.bin").exists()
+    _manifest_path(ckpt, 3).unlink()
+    _manifest_path(ckpt, 2).unlink()
+    e2 = _mk_engine(spark, corpus_df, ckpt)  # fresh engine = process restart
+    assert e2.last_committed_epoch() == 1
+    e2.run()
+    assert e2.fetched_urls_in_order() == full_engine.fetched_urls_in_order()
+    _assert_sketches_hold_seen(spark, e2, 2)
+
+
+def test_failed_sketch_build_leaves_no_marker(spark, corpus_df, tmp_path_factory, engine_run):
+    """Epoch 1's first attempt committed its sketches and was killed before
+    its manifest; the re-run's build then fails inside its cuckoo write. The
+    first attempt's ``bloom.bin`` must not survive to vouch for that table:
+    a later resume that re-runs epoch 1 as its last epoch (no build) would
+    otherwise commit a manifest over a torn sketch set."""
+    full_engine, _ = engine_run
+    ckpt = tmp_path_factory.mktemp("crawl_failed_build")
+    _mk_engine(spark, corpus_df, ckpt).run(max_epochs=3)
+    bloom_1 = ckpt / "sketches" / "epoch=1" / "bloom.bin"
+    assert bloom_1.exists()
+    _manifest_path(ckpt, 2).unlink()
+    _manifest_path(ckpt, 1).unlink()
+    e2 = _mk_engine(spark, corpus_df, ckpt)
+    e2._sketch_rows = lambda *args, **kwargs: spark.range(1).select(
+        F.raise_error(F.lit("killed")).cast("int").alias("pid"),
+        F.lit(None).cast("binary").alias("blob"),
+    )
+    with pytest.raises(Exception, match="killed"):
+        e2.run()
+    assert e2.last_committed_epoch() == 0
+    assert not bloom_1.exists()
+    _mk_engine(spark, corpus_df, ckpt).run(max_epochs=2)  # epoch 1 is last
+    e4 = _mk_engine(spark, corpus_df, ckpt)
+    e4.run()
+    assert e4.fetched_urls_in_order() == full_engine.fetched_urls_in_order()
+    _assert_sketches_hold_seen(spark, e4, 1)
 
 
 def test_repeat_crawl_reuses_generated_code(spark, corpus_df, tmp_path, engine_run):
