@@ -18,12 +18,13 @@ Architecture (north rule, BASELINE.json:6,14):
 * fetch = equi-join of the admitted batch against the pages corpus on ``url``
   (the sandbox's stand-in for HTTP; AQE splits the mega-host skew).
 * extract = the vectorized pandas-UDF pipeline (company + reviews + links).
-* commit = results (companies+reviews+links)/lineage/new-URL delta/frontier
-  snapshot/sketches written under ``epoch=N`` paths by concurrent jobs of
-  one epoch pool; the union of new-URL deltas through epoch N IS the
-  URL-seen set (one table, column-pruned on read); the epoch manifest JSON
-  is written last and is the atomic commit point — a kill anywhere before
-  it re-runs the epoch, and resume replays from the highest manifest.
+* commit = results (companies+reviews+links+lineage columns), then the
+  new-URL delta/frontier snapshot/sketches by concurrent jobs of one epoch
+  pool, all under ``epoch=N`` paths; the union of new-URL deltas through
+  epoch N IS the URL-seen set (one table, column-pruned on read); the epoch
+  manifest JSON is written last and is the atomic commit point — a kill
+  anywhere before it re-runs the epoch, and resume replays from the highest
+  manifest.
 
 Iceberg surface: tables are partitioned Parquet behind stable paths (jars
 absent in sandbox, SURVEY.md §8); on a real cluster the writes become
@@ -32,6 +33,7 @@ absent in sandbox, SURVEY.md §8); on a real cluster the writes become
 
 from __future__ import annotations
 
+import datetime
 import json
 import time
 from dataclasses import dataclass, field
@@ -320,8 +322,9 @@ class CrawlEngine:
         state, so P and capacity can scale with the corpus.
 
         ``bloom.bin`` is the completion marker: it is removed before the
-        cuckoo write and written after it, so a kill in between (on any
-        attempt) leaves no marker. Returns the merged bloom blob.
+        cuckoo write and written after it and after ``layout.json``, so a
+        kill in between (on any attempt) leaves no marker. Returns the
+        merged bloom blob.
         """
         (self._sketch_dir(epoch) / "bloom.bin").unlink(missing_ok=True)
         bloom = (
@@ -335,6 +338,9 @@ class CrawlEngine:
             F.collect_list(F.when(F.col("pid") == -1, F.col("blob"))).alias("blooms"),
         ).filter(F.col("pid") >= 0).write.mode("overwrite").parquet(
             self._cuckoo_dir(epoch)
+        )
+        (self._sketch_dir(epoch) / "layout.json").write_text(
+            json.dumps(self._sketch_layout())
         )
         for fragment in obs.get["blooms"]:
             bloom.merge(BloomFilter.from_bytes(bytes(fragment)))
@@ -447,34 +453,6 @@ class CrawlEngine:
             "total_fetched": sum(s["urls_fetched"] for s in summaries),
         }
 
-    def _write_lineage(self, epoch: int, results_dir: str, lineage_dir: str) -> None:
-        """Per-file lineage (partition_id, urls_fetched, frontier_epoch,
-        fetch_ts), aggregated EXECUTOR-side from the committed results table
-        (``input_file_name()`` groupBy). Storage-agnostic: no driver-side
-        globbing of parquet footers, so the same code runs on HDFS/S3. The
-        aggregate output is metadata-sized (one row per committed file), so
-        the final coalesce(1) + within-partition sort is trivially bounded.
-        """
-        import datetime as _dt
-
-        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        counts = (
-            self.spark.read.parquet(results_dir)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("urls_fetched"))
-        )
-        lineage = (
-            counts.coalesce(1)
-            .sortWithinPartitions("file")
-            .select(
-                F.monotonically_increasing_id().cast("int").alias("partition_id"),
-                "urls_fetched",
-                F.lit(epoch).cast("int").alias("frontier_epoch"),
-                F.lit(now).cast("timestamp").alias("fetch_ts"),
-            )
-        )
-        lineage.write.mode("overwrite").parquet(lineage_dir)
-
     def _write_bloom(self, epoch: int, bloom: bytes) -> None:
         """The bloom blob is the one driver-held sketch (it exists to be
         broadcast); the cuckoo table is committed distributedly by
@@ -489,21 +467,31 @@ class CrawlEngine:
         tmp.write_bytes(bloom)
         os.replace(tmp, d / "bloom.bin")
 
+    def _sketch_layout(self) -> dict:
+        """The pid modulus and hash bit layout a cuckoo table is built under."""
+        return {"cuckoo_partitions": self.cfg.cuckoo_partitions, "layout": CuckooFilter.LAYOUT}
+
     def _resolve_bloom(self, epoch: int) -> bytes | None:
         """Bloom blob AFTER ``epoch``: the committed blob, or a rebuild from
         the delta union when it is missing (the last epoch of a run skips
-        its build; a kill inside a rebuild leaves no marker)."""
+        its build; a kill inside a rebuild leaves no marker) or was built
+        under another layout (a resume with another ``cuckoo_partitions``),
+        whose cuckoo tables the probe would misread."""
         if not self.cfg.use_sketches:
             return None
-        f = self._sketch_dir(epoch) / "bloom.bin"
-        return f.read_bytes() if f.exists() else self._rebuild_sketches(epoch)
+        d = self._sketch_dir(epoch)
+        built = (d / "bloom.bin").exists() and (d / "layout.json").exists()
+        if built and json.loads((d / "layout.json").read_text()) == self._sketch_layout():
+            return (d / "bloom.bin").read_bytes()
+        return self._rebuild_sketches(epoch)
 
     def _rebuild_sketches(self, epoch: int) -> bytes:
-        """Sketches for ``epoch`` are missing: rebuild BOTH sketches from the
-        committed delta union (the exact seen set through ``epoch``) and
-        commit them under this epoch. ``include_prev_cuckoo=False`` because
-        the rebuild inserts every seen URL itself — unioning the previous
-        cuckoo table would double-insert every fingerprint."""
+        """Sketches for ``epoch`` are missing or of another layout: rebuild
+        BOTH sketches from the committed delta union (the exact seen set
+        through ``epoch``) and commit them under this epoch.
+        ``include_prev_cuckoo=False`` because the rebuild inserts every seen
+        URL itself — unioning the previous cuckoo table would double-insert
+        every fingerprint."""
         urls = self._read_seen_through(epoch)
         return self._build_sketches(urls, None, epoch, include_prev_cuckoo=False)
 
@@ -513,21 +501,20 @@ class CrawlEngine:
         cfg = self.cfg
         t0 = time.time()
         steps: dict = {}
-        _t = time.time
 
         def _lap(name: str, since: float) -> float:
-            now = _t()
+            now = time.time()
             steps[name] = round(now - since, 3)
             return now
 
         # One pool per epoch carries the epoch's concurrent jobs: the bloom
-        # resolve, lineage, delta, frontier and sketches (at most four at a
-        # time: the resolve is joined before the last three are submitted).
+        # resolve, delta, frontier and sketches (at most three at a time:
+        # the resolve is joined before the last three are submitted).
         # The try/finally opens IMMEDIATELY after the pool exists: an
         # exception anywhere in the epoch must still join every in-flight
         # job, or an epoch retry could race a stale thread's mode=overwrite
         # parquet into the same epoch directory.
-        epoch_pool = ThreadPoolExecutor(4)
+        epoch_pool = ThreadPoolExecutor(3)
         try:
             # bloom(epoch-1) is first needed at the expand; resolving it on
             # the pool overlaps a rebuild (epoch 0's seed sketches, or a
@@ -596,10 +583,15 @@ class CrawlEngine:
             # results table in the same job, counts ride along as an observed
             # metric, and every downstream step re-reads the committed, column-
             # pruned parquet instead of re-evaluating (or caching) the UDF plan.
+            # The same write carries the lineage (north rule fields): the
+            # scan → join → UDF → write stage has no shuffle, so
+            # ``spark_partition_id()`` is the fetch-scan task that writes the
+            # row's ``part-NNNNN`` file.
             extracted = fetched.select(
                 "url", "depth", "warc_ts", self._extract("html").alias("x")
             )
-            epoch_dir = lambda name: str(self.ckpt / name / f"epoch={epoch}")  # noqa: E731
+            results_dir = str(self.ckpt / "results" / f"epoch={epoch}")
+            fetch_ts = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
             obs = Observation(f"results_{epoch}")
             results = extracted.select(
                 "url", "depth", "warc_ts",
@@ -607,6 +599,9 @@ class CrawlEngine:
                 F.col("x.reviews").alias("reviews"),
                 F.col("x.links").alias("links"),
                 F.col("x.error").alias("extract_error"),
+                F.spark_partition_id().alias("partition_id"),
+                F.lit(epoch).cast("int").alias("frontier_epoch"),
+                F.lit(fetch_ts).cast("timestamp").alias("fetch_ts"),
             ).observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
@@ -615,29 +610,13 @@ class CrawlEngine:
             # written straight off the scan partitions: extraction + write is ONE
             # stage, and the fat extracted structs (company/reviews/links) never
             # shuffle — one results file per fetch-scan task
-            results.write.mode("overwrite").parquet(epoch_dir("results"))
+            results.write.mode("overwrite").parquet(results_dir)
             fetched_n = int(obs.get["n"])
             extract_errors = int(obs.get["extract_errors"])
-            res = self.spark.read.parquet(epoch_dir("results"))
+            res = self.spark.read.parquet(results_dir)
             t_step = _lap("fetch_extract_write", t_step)
 
-            # 4. lineage: per-partition fetch accounting (north rule fields),
-            # aggregated executor-side from the committed results table. It only
-            # needs the committed parquet and owns a disjoint output directory,
-            # so it runs CONCURRENTLY with the expand phase below (the epoch
-            # pool is joined before the manifest write).
-            # 4b. lineage runs concurrently; its wall time is recorded from
-            # inside the future.
-            def _timed_lineage():
-                t_l = _t()
-                self._write_lineage(
-                    epoch, epoch_dir("results"), epoch_dir("lineage")
-                )
-                steps["lineage_concurrent"] = round(_t() - t_l, 3)
-
-            fut_lineage = epoch_pool.submit(_timed_lineage)
-
-            # 5. expand: normalize links, min-depth dedupe, sketch
+            # 4. expand: normalize links, min-depth dedupe, sketch
             #    prefilter, exact residual anti-join against the full seen
             #    set; the epoch's delta commits once and is the seen-set
             #    increment.
@@ -680,7 +659,7 @@ class CrawlEngine:
             obs_delta = Observation(f"delta_{epoch}")
             t_step = _lap("expand", t_step)
 
-            # 6. next frontier snapshot: survivors (pending minus this batch) +
+            # 5. next frontier snapshot: survivors (pending minus this batch) +
             #    the newly discovered URLs; laid out by (host_prefix, salt).
             survivors = pending.join(batch.select("url"), "url", "left_anti")
             obs_front = Observation(f"frontier_{epoch}")
@@ -694,15 +673,14 @@ class CrawlEngine:
                 )
             )
 
-            # 5b+6+7 run CONCURRENTLY (on the epoch pool that already
-            # carries the lineage write): the delta commit, the frontier
-            # snapshot and the sketch build all read the pinned expansion
-            # and touch disjoint outputs — driver threads submit the jobs so
-            # the cluster is never idle between them. The manifest (the
-            # atomic commit point) writes strictly after every one of them
-            # has finished. The LAST epoch of the run skips the sketch
-            # build: nothing in this run reads its sketches, and a resume
-            # rebuilds them from the delta union on first need.
+            # 4b+5+6 run CONCURRENTLY on the epoch pool: the delta commit,
+            # the frontier snapshot and the sketch build all read the pinned
+            # expansion and touch disjoint outputs — driver threads submit
+            # the jobs so the cluster is never idle between them. The
+            # manifest (the atomic commit point) writes strictly after every
+            # one of them has finished. The LAST epoch of the run skips the
+            # sketch build: nothing in this run reads its sketches, and a
+            # resume rebuilds them from the delta union on first need.
 
             def _commit_delta() -> int:
                 new_frontier.observe(
@@ -724,7 +702,6 @@ class CrawlEngine:
                 ).result()
             new_n = fut_delta.result()
             pending_after = fut_frontier.result()
-            fut_lineage.result()
         finally:
             epoch_pool.shutdown(wait=True)
         new_frontier.unpersist()

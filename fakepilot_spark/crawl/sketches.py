@@ -93,9 +93,16 @@ class CuckooFilter:
 
     Fingerprint 0 is reserved for "empty", so fingerprints live in [1, 2^16).
     Eviction is deterministic (slot = kicks % 4), keeping inserts replayable.
+
+    Disjoint hash bits (``LAYOUT``): bits 0–15 are left to the caller's
+    pid (the engine's ``pmod(xxhash64(url), P)``, P ≤ 2^16), bits 16–47
+    pick the bucket (n_buckets ≤ 2^32), bits 48–63 the fingerprint. One
+    pid's keys share their low bits, so buckets taken from them would fill
+    at ~half load: Fan et al.'s load bound assumes uniform bucket indices.
     """
 
     __slots__ = ("n_buckets", "table", "n_items")
+    LAYOUT = 2
 
     def __init__(self, n_buckets: int, table: np.ndarray | None = None, n_items: int = 0):
         # power-of-two bucket count → index math is masking
@@ -111,11 +118,11 @@ class CuckooFilter:
         return cls(max(16, int(n_items / (load * _SLOTS)) + 1))
 
     def _fp(self, h: np.ndarray) -> np.ndarray:
-        fp = ((h >> np.uint64(40)) & np.uint64(0xFFFF)).astype(np.uint16)
+        fp = (h >> np.uint64(48)).astype(np.uint16)
         return np.where(fp == 0, np.uint16(1), fp)
 
     def _i1(self, h: np.ndarray) -> np.ndarray:
-        return (h & np.uint64(self.n_buckets - 1)).astype(np.int64)
+        return ((h >> np.uint64(16)) & np.uint64(self.n_buckets - 1)).astype(np.int64)
 
     def _alt(self, i, fp):
         # partial-key cuckoo hashing: i2 = i1 xor H(fp); on ints or int64
@@ -174,12 +181,16 @@ class CuckooFilter:
         """Union by re-inserting the other filter's fingerprints through the
         displacement logic (valid for partition-disjoint key sets). A stored
         fingerprint's bucket and its alternate are the key's two candidates,
-        so the bucket it sits in stands in for the key's first one."""
+        so the bucket it sits in stands in for the key's first one. The
+        item counts add: copies ``other`` dropped as saturated were counted
+        there but are not in its table."""
         if other.n_buckets != self.n_buckets:
             raise ValueError("cuckoo parameter mismatch")
+        n_items = self.n_items + other.n_items
         rows, slots = np.nonzero(other.table)
         for i, fp in zip(rows.tolist(), other.table[rows, slots].tolist()):
             self._insert(i, fp)
+        self.n_items = n_items
         return self
 
     def to_bytes(self) -> bytes:

@@ -52,7 +52,7 @@ def corpus_dict(corpus_df):
     }
 
 
-def _mk_engine(spark, corpus_df, tmp_path, use_sketches=True):
+def _mk_engine(spark, corpus_df, tmp_path, use_sketches=True, cuckoo_partitions=4):
     cfg = CrawlConfig(
         checkpoint_dir=str(tmp_path),
         seeds=SEEDS,
@@ -64,7 +64,7 @@ def _mk_engine(spark, corpus_df, tmp_path, use_sketches=True):
         host_budgets=BUDGETS,
         use_sketches=use_sketches,
         bloom_capacity=4096,
-        cuckoo_partitions=4,
+        cuckoo_partitions=cuckoo_partitions,
         cuckoo_capacity_per_partition=4096,
     )
     return CrawlEngine(spark, corpus_df, cfg)
@@ -154,19 +154,27 @@ def test_extraction_outputs_present(engine_run):
 
 
 def test_lineage_accounts_for_every_fetch(engine_run, spark):
-    """North-rule lineage fields (BASELINE.json:6): every committed epoch
-    carries a lineage table whose per-partition ``urls_fetched`` sums to the
-    epoch's fetch count, with the epoch id and a fetch timestamp on every
-    row."""
-    engine, summary = engine_run
-    for ep in summary["epochs"]:
-        rows = spark.read.parquet(
-            str(engine.ckpt / "lineage" / f"epoch={ep['epoch']}")
-        ).collect()
-        assert sum(r["urls_fetched"] for r in rows) == ep["urls_fetched"]
-        assert {r["frontier_epoch"] for r in rows} == {ep["epoch"]}
-        assert all(r["fetch_ts"] is not None for r in rows)
-        assert len({r["partition_id"] for r in rows}) == len(rows)
+    """North-rule lineage fields (BASELINE.json:6) are columns of the
+    results table: grouped by ``partition_id``, each epoch's rows sum to its
+    fetch count, carry the epoch id and a fetch timestamp, and form exactly
+    one group per results file, whose ``part-NNNNN`` index is the group's
+    ``partition_id``."""
+    engine, _ = engine_run
+    for e in range(engine.last_committed_epoch() + 1):
+        path = engine.ckpt / "results" / f"epoch={e}"
+        groups = (
+            spark.read.parquet(str(path))
+            .groupBy("partition_id", "frontier_epoch", "fetch_ts",
+                     F.input_file_name().alias("file"))
+            .count()
+            .collect()
+        )
+        assert sum(g["count"] for g in groups) == _manifest(engine, e)["urls_fetched"]
+        assert {g["frontier_epoch"] for g in groups} == {e}
+        assert all(g["fetch_ts"] is not None for g in groups)
+        placed = sorted((g["file"].rsplit("/", 1)[1], g["partition_id"]) for g in groups)
+        assert [name for name, _ in placed] == sorted(f.name for f in path.glob("part-*.parquet"))
+        assert all(name.startswith(f"part-{pid:05d}-") for name, pid in placed), placed
 
 
 def test_resume_reproduces_uninterrupted_run(spark, corpus_df, tmp_path_factory, engine_run):
@@ -318,11 +326,17 @@ def test_manifest_commits_sketches(engine_run, bloom_at_commit):
         assert present == (epoch != last), (epoch, present)
 
 
-def test_resume_after_kill_before_manifest(spark, corpus_df, tmp_path_factory, engine_run):
+@pytest.mark.parametrize("resume_partitions", [4, 2])
+def test_resume_after_kill_before_manifest(
+    spark, corpus_df, tmp_path_factory, engine_run, oracle_result, resume_partitions
+):
     """Kill after epoch 2 wrote every table, its sketches included, but
     before its manifest. The resume re-runs epoch 2 over its own leftovers;
     a re-run that read its stale cuckoo rows instead of epoch 1's would
-    insert fingerprints twice, which the ``n_items == seen`` check catches."""
+    insert fingerprints twice, which the ``n_items == seen`` check catches.
+    Resumed under another ``cuckoo_partitions``, epoch 1's tables are keyed
+    by the old pid modulus: probing them as they are would miss seen URLs
+    and enqueue them again, so they must be rebuilt under the new one."""
     full_engine, _ = engine_run
     ckpt = tmp_path_factory.mktemp("crawl_kill_before_manifest")
     e1 = _mk_engine(spark, corpus_df, ckpt)
@@ -330,10 +344,14 @@ def test_resume_after_kill_before_manifest(spark, corpus_df, tmp_path_factory, e
     assert (ckpt / "sketches" / "epoch=2" / "bloom.bin").exists()
     _manifest_path(ckpt, 3).unlink()
     _manifest_path(ckpt, 2).unlink()
-    e2 = _mk_engine(spark, corpus_df, ckpt)  # fresh engine = process restart
+    # fresh engine = process restart
+    e2 = _mk_engine(spark, corpus_df, ckpt, cuckoo_partitions=resume_partitions)
     assert e2.last_committed_epoch() == 1
     e2.run()
     assert e2.fetched_urls_in_order() == full_engine.fetched_urls_in_order()
+    deltas = [r["url"] for r in spark.read.parquet(str(ckpt / "new")).select("url").collect()]
+    assert len(deltas) == len(set(deltas))
+    assert set(deltas) == oracle_result["seen"]
     _assert_sketches_hold_seen(spark, e2, 2)
 
 
@@ -371,7 +389,7 @@ def test_repeat_crawl_reuses_generated_code(spark, corpus_df, tmp_path, engine_r
     crawl must find its generated classes in Spark's codegen cache. With the
     default 100-entry cache the crawl's working set evicts itself and every
     repeat recompiles ~260 classes; what remains are plans whose literals
-    change per run (lineage's fetch timestamp)."""
+    change per run (the results write's fetch timestamp)."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     before = metrics.METRIC_COMPILATION_TIME().getCount()
     _mk_engine(spark, corpus_df, tmp_path).run()

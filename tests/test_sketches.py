@@ -137,6 +137,21 @@ def test_cuckoo_merge_counts_items(xs, ys):
     assert a.merge(b).n_items == n_a + n_b
 
 
+def test_cuckoo_one_pid_fills_past_nine_tenths():
+    """One pid's table, as the engine fills it: every hash shares its low
+    bits (``pmod(xxhash64(url), 16)`` picked the table), and the table is
+    the default ``for_capacity(1 << 16)``. It must take 0.9 of its slots
+    without raising and without a false negative."""
+    rng = np.random.default_rng(3)
+    cf = CuckooFilter.for_capacity(1 << 16)
+    n = int(0.9 * cf.table.size)
+    hs = rng.integers(0, (1 << 64) - 1, size=n + 1000, dtype=np.uint64) & ~np.uint64(15)
+    hs = rng.permutation(np.unique(hs))[:n]
+    cf.add_many(hs)
+    assert cf.n_items == n
+    assert cf.contains_many(hs).all()
+
+
 def test_cuckoo_fpp_reasonable():
     rng = np.random.default_rng(11)
     items = rng.integers(0, 1 << 63, size=30_000, dtype=np.uint64)
